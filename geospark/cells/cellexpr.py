@@ -1,26 +1,47 @@
 """Catalyst-native cell-id encoding: the same (morton(ix,iy) << 6) |
-level packing as cellid.pack, built from shift/mask Column expressions
-so point→cell assignment runs inside whole-stage codegen with no
-python worker at all.
+level packing as cellid.pack, built from shift/mask expressions so
+point→cell assignment runs inside whole-stage codegen with no python
+worker at all.
 
 Bit-identical to the numpy encoders by construction: the float
 pipeline ((x - x0) / span * 2^level, truncate-toward-zero, clip) uses
 the same IEEE-754 double operations in the same order, and the Morton
 spread uses the same magic-number ladder (cellid._part1by1).
 Equivalence is property-tested in tests/test_cells_crs.py.
+
+Every expression is composed as Spark SQL text and parsed by ONE
+F.expr call.  Building the same tree from Column operators costs one
+py4j round trip per operator — a cell id is ~100 of them, a kNN query
+cover ~1,400 — which measured 0.5 s of driver time per knn_join before
+any task ran.  Inputs are SQL text as well: sql_col(name) for a
+column, or any SQL expression over columns.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, functions as F
 
 from .cellid import MAX_LEVEL, CellGrid
 
 
+def sql_col(name: str) -> str:
+    """SQL text referencing column `name`."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_double(v: float) -> str:
+    """SQL text of the DOUBLE `v`, exactly (repr round-trips; 'inf',
+    '-inf' and 'nan' cast from strings)."""
+    v = float(v)
+    return f"({v!r}D)" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+
+
 # Two Morton spread forms, picked by EXPRESSION CONTEXT:
 #
 #   ladder — the classic shift-or ladder.  References its input at
-#   every step, so the expression TREE doubles per step (2^6 ≈ 64
+#   every step, so the expression TREE doubles per step (2^5 = 32
 #   copies of the input subtree).  In a Project/Aggregate stage,
 #   whole-stage codegen's subexpression elimination collapses the
 #   copies and the pure-ALU form is the fastest (measured 0.32 s /
@@ -47,61 +68,65 @@ def _spread_byte(b: int) -> int:
     return v
 
 
-_MORTON_TAB = [_spread_byte(b) for b in range(256)]
+# elements must be BIGINT: shiftleft on an int column masks the shift
+# amount to 5 bits (shift-by-32 becomes shift-by-0)
+_MORTON_TAB_SQL = "array(" + ",".join(f"{_spread_byte(b)}L" for b in range(256)) + ")"
+
+_SPREAD_LADDER = (
+    (16, 0x0000FFFF0000FFFF),
+    (8, 0x00FF00FF00FF00FF),
+    (4, 0x0F0F0F0F0F0F0F0F),
+    (2, 0x3333333333333333),
+    (1, 0x5555555555555555),
+)
+_COMPACT_LADDER = (
+    (1, 0x3333333333333333),
+    (2, 0x0F0F0F0F0F0F0F0F),
+    (4, 0x00FF00FF00FF00FF),
+    (8, 0x0000FFFF0000FFFF),
+    (16, 0x00000000FFFFFFFF),
+)
 
 
-def _part1by1_ladder_expr(v: Column) -> Column:
-    """Shift-or ladder spread — use only when the input is a cheap
-    leaf (column ref / lambda var) or the stage is a codegen-verified
-    Project (see module comment)."""
-    v = v.bitwiseAND(F.lit(0x00000000FFFFFFFF))
-    v = (v.bitwiseOR(F.shiftleft(v, 16))).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-    v = (v.bitwiseOR(F.shiftleft(v, 8))).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-    v = (v.bitwiseOR(F.shiftleft(v, 4))).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-    v = (v.bitwiseOR(F.shiftleft(v, 2))).bitwiseAND(F.lit(0x3333333333333333))
-    v = (v.bitwiseOR(F.shiftleft(v, 1))).bitwiseAND(F.lit(0x5555555555555555))
+def _part1by1_sql(v: str, form: str = "table") -> str:
+    """Spread the low 32 bits of a long across even bit positions
+    (bit-identical to cellid._part1by1, property-tested).  The ladder
+    form is for cheap leaves (column refs, lambda vars) or
+    codegen-verified Project stages only (see the comment above)."""
+    if form == "ladder":
+        v = f"({v} & 4294967295L)"
+        for shift, mask in _SPREAD_LADDER:
+            v = f"(({v} | shiftleft({v}, {shift})) & {mask}L)"
+        return v
+    parts = []
+    for k in range(4):
+        byte = f"(shiftrightunsigned({v}, {8 * k}) & 255L)" if k else f"({v} & 255L)"
+        part = f"element_at({_MORTON_TAB_SQL}, cast({byte} + 1 as int))"
+        parts.append(f"shiftleft({part}, {16 * k})" if k else part)
+    return "(" + " | ".join(parts) + ")"
+
+
+def _compact1by1_sql(v: str) -> str:
+    """Inverse of _part1by1_sql: gather even bit positions into the
+    low 32 bits (same ladder as cellid._compact1by1)."""
+    v = f"({v} & {0x5555555555555555}L)"
+    for shift, mask in _COMPACT_LADDER:
+        v = f"(({v} | shiftright({v}, {shift})) & {mask}L)"
     return v
 
 
-# the 256-entry table as ONE cached Column: building it from 256
-# F.lit() calls costs ~512 py4j round trips per query (measured ~1 s
-# of driver-side plan-building per pip_join at fixture scale); a
-# single F.expr string is one call, parsed once, and the unresolved
-# literal Column is session-independent so module-level reuse is safe
-_MORTON_TAB_COL = None
+def _pack_sql(ix: str, iy: str, level: int, form: str = "table") -> str:
+    """cellid.pack over (ix, iy) SQL text."""
+    if level > MAX_LEVEL:
+        raise ValueError(f"cell level {level} > MAX_LEVEL {MAX_LEVEL}")
+    m = f"({_part1by1_sql(ix, form)} | shiftleft({_part1by1_sql(iy, form)}, 1))"
+    return f"(shiftleft({m}, 6) | {level})"
 
 
-def _morton_tab_col() -> Column:
-    global _MORTON_TAB_COL
-    if _MORTON_TAB_COL is None:
-        # elements must be BIGINT: shiftleft on an int column masks
-        # the shift amount to 5 bits (shift-by-32 becomes shift-by-0)
-        _MORTON_TAB_COL = F.expr(
-            "array(" + ",".join(f"{x}L" for x in _MORTON_TAB) + ")"
-        )
-    return _MORTON_TAB_COL
-
-
-def _part1by1_expr(v: Column, form: str = "table") -> Column:
-    """Spread the low 32 bits of a long across even bit positions
-    (bit-identical to cellid._part1by1, property-tested)."""
-    if form == "ladder":
-        return _part1by1_ladder_expr(v)
-    tab = _morton_tab_col()
-    out = None
-    for k in range(4):
-        byte = F.shiftrightunsigned(v, 8 * k).bitwiseAND(F.lit(0xFF)) if k else v.bitwiseAND(F.lit(0xFF))
-        part = F.element_at(tab, (byte + 1).cast("int"))
-        if k:
-            part = F.shiftleft(part, 16 * k)
-        out = part if out is None else out.bitwiseOR(part)
-    return out
-
-
-def cell_xy_expr(x: Column, y: Column, level: int, grid: CellGrid) -> tuple:
-    """(ix, iy) cell coordinates at `level` — mirrors CellGrid.cell_xy
-    exactly: (x - x0)/span * 2^level, clamp to [0, 2^level) as a
-    DOUBLE, then truncate toward zero.
+def cell_xy_sql(x: str, y: str, level: int, grid: CellGrid) -> tuple:
+    """(ix, iy) SQL text of the cell coordinates at `level` — mirrors
+    CellGrid.cell_xy exactly: (x - x0)/span * 2^level, clamp to
+    [0, 2^level) as a DOUBLE, then truncate toward zero.
 
     Clamping BEFORE the cast matters twice: under ANSI mode (Spark 4
     default) an out-of-long-range double would make CAST throw rather
@@ -110,110 +135,93 @@ def cell_xy_expr(x: Column, y: Column, level: int, grid: CellGrid) -> tuple:
     domain edge for arbitrarily large out-of-domain coordinates
     (cellid.cell_xy clips the float the same way)."""
     n = 1 << level
-    # nanvl first: Spark orders NaN LARGEST, so least/greatest would
-    # clamp NaN to the far corner while numpy maps it to cell 0
-    fx = F.nanvl((x - F.lit(grid.x0)) / F.lit(grid.span) * F.lit(float(n)), F.lit(0.0))
-    fy = F.nanvl((y - F.lit(grid.y0)) / F.lit(grid.span) * F.lit(float(n)), F.lit(0.0))
-    ix = F.least(F.greatest(fx, F.lit(0.0)), F.lit(float(n - 1))).cast("long")
-    iy = F.least(F.greatest(fy, F.lit(0.0)), F.lit(float(n - 1))).cast("long")
-    return ix, iy
+
+    def axis(v: str, origin: float) -> str:
+        # nanvl first: Spark orders NaN LARGEST, so least/greatest
+        # would clamp NaN to the far corner while numpy maps it to 0
+        f = (
+            f"nanvl((({v}) - {sql_double(origin)}) / {sql_double(grid.span)}"
+            f" * {sql_double(n)}, 0.0D)"
+        )
+        return f"cast(least(greatest({f}, 0.0D), {sql_double(n - 1)}) as bigint)"
+
+    return axis(x, grid.x0), axis(y, grid.y0)
 
 
-def _compact1by1_expr(v: Column) -> Column:
-    """Inverse of _part1by1_expr: gather even bit positions into the
-    low 32 bits (same ladder as cellid._compact1by1)."""
-    v = v.bitwiseAND(F.lit(0x5555555555555555))
-    v = (v.bitwiseOR(F.shiftright(v, 1))).bitwiseAND(F.lit(0x3333333333333333))
-    v = (v.bitwiseOR(F.shiftright(v, 2))).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-    v = (v.bitwiseOR(F.shiftright(v, 4))).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-    v = (v.bitwiseOR(F.shiftright(v, 8))).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-    v = (v.bitwiseOR(F.shiftright(v, 16))).bitwiseAND(F.lit(0x00000000FFFFFFFF))
-    return v
-
-
-def cell_ix_expr(cid: Column) -> Column:
+def cell_ix_expr(cid: str) -> Column:
     """ix from a packed cell id (cellid.unpack in Catalyst)."""
-    return _compact1by1_expr(F.shiftrightunsigned(cid, 6))
+    return F.expr(_compact1by1_sql(f"shiftrightunsigned({cid}, 6)"))
 
 
-def cell_iy_expr(cid: Column) -> Column:
+def cell_iy_expr(cid: str) -> Column:
     """iy from a packed cell id."""
-    return _compact1by1_expr(F.shiftrightunsigned(cid, 7))
+    return F.expr(_compact1by1_sql(f"shiftrightunsigned({cid}, 7)"))
 
 
-def cell_level_expr(cid: Column) -> Column:
+def cell_level_expr(cid: str) -> Column:
     """level from a packed cell id."""
-    return cid.bitwiseAND(F.lit(0x3F))
+    return F.expr(f"({cid} & 63)")
 
 
-def cell_id_expr(
-    x: Column, y: Column, level: int, grid: CellGrid, form: str = "table"
-) -> Column:
-    """Packed Z-order cell id for a point — cellid.pack in Catalyst.
+def cell_id_sql(x: str, y: str, level: int, grid: CellGrid, form: str = "table") -> str:
+    """SQL text of the packed Z-order cell id of a point — cellid.pack
+    in Catalyst.
 
     form="ladder" only for codegen-verified Project/Aggregate stages
-    (see the Morton-form module comment); the default table form is
-    robust as a join key."""
-    if level > MAX_LEVEL:
-        raise ValueError(f"cell level {level} > MAX_LEVEL {MAX_LEVEL}")
-    ix, iy = cell_xy_expr(x, y, level, grid)
-    m = _part1by1_expr(ix, form).bitwiseOR(F.shiftleft(_part1by1_expr(iy, form), 1))
-    return F.shiftleft(m, 6).bitwiseOR(F.lit(level))
+    (see the Morton-form comment); the default table form is robust as
+    a join key."""
+    return _pack_sql(*cell_xy_sql(x, y, level, grid), level, form)
 
 
-def env_cells_expr(
-    xmin: Column, ymin: Column, xmax: Column, ymax: Column, level: int, grid: CellGrid
-) -> Column:
+def cell_id_expr(x: str, y: str, level: int, grid: CellGrid, form: str = "table") -> Column:
+    """cell_id_sql as a Column."""
+    return F.expr(cell_id_sql(x, y, level, grid, form))
+
+
+def env_cells_expr(xmin: str, ymin: str, xmax: str, ymax: str, level: int, grid: CellGrid) -> Column:
     """array<long> of every cell id at `level` touched by the bbox —
     the Catalyst twin of ops.knn._env_cells_udf, built from
     sequence × transform × flatten so the whole cover generation runs
-    inside codegen with no python worker.
+    with no python worker.
 
-    Uses the SAME cell_xy_expr as point assignment, so a build point's
+    Uses the SAME cell_xy_sql as point assignment, so a build point's
     cell is always inside the cover of any envelope containing it
     (self-consistency is what the kNN lower bound needs; mixing float
     op orders across the two sides could drop a boundary point)."""
-    if level > MAX_LEVEL:
-        raise ValueError(f"cell level {level} > MAX_LEVEL {MAX_LEVEL}")
-    ix0, iy0 = cell_xy_expr(xmin, ymin, level, grid)
-    ix1, iy1 = cell_xy_expr(xmax, ymax, level, grid)
+    ix0, iy0 = cell_xy_sql(xmin, ymin, level, grid)
+    ix1, iy1 = cell_xy_sql(xmax, ymax, level, grid)
     # inverted envelopes (all-NaN → 0, or caller-swapped bounds) must
-    # not feed sequence() a start > stop
-    ix1 = F.greatest(ix0, ix1)
-    iy1 = F.greatest(iy0, iy1)
-
-    def pack(ix, iy):
-        # ladder on the lambda vars: duplicating a bound leaf is free,
-        # while a 256-element array literal inside an interpreted
-        # lambda would be re-built per element
-        m = _part1by1_ladder_expr(ix).bitwiseOR(F.shiftleft(_part1by1_ladder_expr(iy), 1))
-        return F.shiftleft(m, 6).bitwiseOR(F.lit(level))
-
-    return F.flatten(
-        F.transform(
-            F.sequence(ix0, ix1),
-            lambda ix: F.transform(F.sequence(iy0, iy1), lambda iy: pack(ix, iy)),
-        )
+    # not feed sequence() a start > stop; the ladder on the lambda
+    # vars: duplicating a bound leaf is free, while a 256-element array
+    # literal inside an interpreted lambda would be re-built per element
+    return F.expr(
+        f"flatten(transform(sequence({ix0}, greatest({ix0}, {ix1})), __ix -> "
+        f"transform(sequence({iy0}, greatest({iy0}, {iy1})), __iy -> "
+        f"{_pack_sql('__ix', '__iy', level, 'ladder')})))"
     )
 
 
 def explode_cover3(
     df,
-    xmin: Column,
-    ymin: Column,
-    xmax: Column,
-    ymax: Column,
+    xmin: str,
+    ymin: str,
+    xmax: str,
+    ymax: str,
     level: int,
     grid: CellGrid,
     out_col: str = "__cell",
 ):
     """df with every column plus `out_col` = one exploded cover cell
-    per row, for bboxes KNOWN to span at most 3 cells per axis (true
+    per row, for bboxes KNOWN to span at most 4 cells per axis — true
     whenever width/height ≤ 2 × cell_size, e.g. a point envelope
-    expanded by rng with cell_size ≥ rng).  Same cell SET per row as
+    expanded by rng with cell_size ≥ rng.  Exact arithmetic puts such a
+    bbox in at most 3 cells per axis; float rounding of the expanded
+    bounds and of the index math can land a bound 1 ulp across one more
+    cell boundary (rng == cell_size exactly, property-tested), so the
+    offset grid is 4×4.  Same cell SET per row as
     `explode(env_cells_expr(...))` — pinned by a property test — but
     ~32× faster on a large side (0.97s vs 31.3s at 20M rows / 174M
-    cover cells, local[32]).
+    cover cells, local[32], 3×3 grid).
 
     Why a DataFrame helper and not an array expression: every
     expression form measured WORSE than the interpreted HOF cover it
@@ -228,29 +236,26 @@ def explode_cover3(
     re-evaluates everything per row (113s).  The shape that is fast
     keeps the Generate TRIVIAL and the arithmetic in ordinary
     Project/Filter nodes: materialize the four clamped cell indices,
-    explode a literal 0..8 grid offset, filter offsets past the range,
+    explode a literal 0..15 grid offset, filter offsets past the range,
     pack the single surviving (ix, iy) per row.
 
     Order of emitted cells differs from env_cells_expr (grid-offset
     order vs ix-major enumeration); every consumer feeds an unordered
     equi-join, so only the per-row SET matters."""
-    if level > MAX_LEVEL:
-        raise ValueError(f"cell level {level} > MAX_LEVEL {MAX_LEVEL}")
-    ix0, iy0 = cell_xy_expr(xmin, ymin, level, grid)
-    ix1, iy1 = cell_xy_expr(xmax, ymax, level, grid)
-    step = df.select(
-        "*",
-        ix0.alias("__cv_ix0"),
-        iy0.alias("__cv_iy0"),
-        F.greatest(ix0, ix1).alias("__cv_ix1"),
-        F.greatest(iy0, iy1).alias("__cv_iy1"),
-    ).select("*", F.explode(F.array(*[F.lit(k) for k in range(9)])).alias("__cv_k"))
-    ix = F.col("__cv_ix0") + (F.col("__cv_k") % 3)
-    iy = F.col("__cv_iy0") + (F.col("__cv_k") / 3).cast("long")
-    m = _part1by1_expr(ix).bitwiseOR(F.shiftleft(_part1by1_expr(iy), 1))
+    ix0, iy0 = cell_xy_sql(xmin, ymin, level, grid)
+    ix1, iy1 = cell_xy_sql(xmax, ymax, level, grid)
+    ix, iy = "(__cv_ix0 + __cv_k % 4)", "(__cv_iy0 + __cv_k div 4)"
     return (
-        step.where((ix <= F.col("__cv_ix1")) & (iy <= F.col("__cv_iy1")))
-        .select("*", F.shiftleft(m, 6).bitwiseOR(F.lit(level)).alias(out_col))
+        df.selectExpr(
+            "*",
+            f"{ix0} AS __cv_ix0",
+            f"{iy0} AS __cv_iy0",
+            f"greatest({ix0}, {ix1}) AS __cv_ix1",
+            f"greatest({iy0}, {iy1}) AS __cv_iy1",
+        )
+        .selectExpr("*", f"explode(array({', '.join(map(str, range(16)))})) AS __cv_k")
+        .where(f"{ix} <= __cv_ix1 AND {iy} <= __cv_iy1")
+        .selectExpr("*", f"{_pack_sql(ix, iy, level)} AS {sql_col(out_col)}")
         .drop("__cv_ix0", "__cv_iy0", "__cv_ix1", "__cv_iy1", "__cv_k")
     )
 

@@ -15,7 +15,6 @@ data-parallel, zero shuffles before the final count/sink.
 from __future__ import annotations
 
 import re
-from collections import defaultdict
 from typing import Iterator, Optional
 
 import numpy as np
@@ -28,61 +27,19 @@ from ..cells.coverage import cover_geometry
 from ..extract.geocode import GEO_RE
 from ..geom import core as gc
 from ..geom import predicates as gpred
+from . import joins
+from .joins import build_cell_index  # noqa: F401  (public here too)
 
 
-# broadcast-index reuse across calls on the SAME polygon DataFrame
-# object: a long-running job queries one dimension layer repeatedly
-# and should pay the collect + driver-side cover + broadcast ONCE, not
-# per query.  Weak keys: dropping the DataFrame drops its cached
-# indexes, and a finalizer UNPERSISTS the broadcasts at that point
-# (executor blocks are freed eagerly instead of waiting on driver GC +
-# ContextCleaner; see _release_entries for why not destroy).
-#
-# CONTRACT: identity implies identical data only for DataFrames over
-# immutable sources.  A DataFrame whose underlying files are
-# re-written in place (overwritten parquet path, replaced temp view)
-# would return a STALE index — cached dimension tables must be backed
-# by immutable snapshots (the Iceberg-snapshot discipline the pipeline
-# runner already follows).
-import weakref
-
-_INDEX_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _release_entries(per_df: dict) -> None:
-    # unpersist, NOT destroy: a result DataFrame returned to the
-    # caller closes over the broadcast and may outlive the dimension
-    # DataFrame object that keyed the cache — destroy() would make
-    # serializing its tasks throw INTERNAL_ERROR_BROADCAST (found by
-    # the entry smoke test).  unpersist frees the executor copies
-    # eagerly; a surviving plan that still needs the broadcast
-    # re-fetches it from the driver, and full teardown is left to the
-    # ContextCleaner once the last closure reference drops.
-    for bc in per_df.values():
-        try:
-            bc.unpersist(blocking=False)
-        except Exception:
-            pass
-    per_df.clear()
-
-
-def _cached_index_bc(polys, poly_id, poly_geom, grid: CellGrid, level: int):
-    per_df = _INDEX_CACHE.get(polys)
-    if per_df is None:
-        per_df = _INDEX_CACHE[polys] = {}
-        # fires when the DataFrame object is collected — release the
-        # executor copies eagerly rather than waiting on the
-        # ContextCleaner (see _release_entries for why not destroy)
-        weakref.finalize(polys, _release_entries, per_df)
-    key = (poly_id, poly_geom, grid.x0, grid.y0, grid.span, level)
-    bc = per_df.get(key)
-    if bc is None:
-        rows = [(r[0], bytes(r[1])) for r in polys.select(poly_id, poly_geom).collect()]
-        bc = polys.sparkSession.sparkContext.broadcast(
-            build_cell_index(rows, grid, level)
-        )
-        per_df[key] = bc
-    return bc
+def _broadcast_index(polys, poly_id, poly_geom, grid: CellGrid, level):
+    """(level, broadcast CSR index) of the dimension layer from the
+    shared dimension cache (ops.joins.dimension), or (level, None) when
+    the build side is over the broadcast size gate."""
+    dim = joins.dimension(polys, poly_id, poly_geom, grid)
+    level = dim.level if level is None else level
+    if dim.build_bytes > joins.BROADCAST_MAX_BYTES:
+        return level, None
+    return level, dim.cover(polys, level)[1]
 
 
 def _extract_points_jvm(pages: DataFrame, include_url: bool) -> DataFrame:
@@ -150,38 +107,6 @@ def _out_schema(polys: DataFrame, poly_id: str, include_url: bool) -> StructType
         StructField("cell_id", LongType()),
     ]
     return StructType(fields)
-
-
-def build_cell_index(polys_rows, grid: CellGrid, level: int):
-    """cell id → int32 indexes into the polygon arrays, in CSR layout
-    (sorted keys + member slices) so the probe resolves every cell of
-    a batch with ONE np.searchsorted (driver-side; result is
-    broadcast)."""
-    pids = []
-    wkbs = []
-    cell_map = defaultdict(list)
-    for i, (pid, wkb) in enumerate(polys_rows):
-        g = gc.from_wkb(wkb)
-        for cid in cover_geometry(g, grid, level):
-            cell_map[int(cid)].append(i)
-        pids.append(pid)
-        wkbs.append(wkb)
-    sorted_cells = sorted(cell_map)
-    counts = np.asarray([len(cell_map[c]) for c in sorted_cells], dtype=np.int64)
-    return {
-        "pids": np.asarray(pids),
-        "wkbs": wkbs,
-        "cell_keys": np.asarray(sorted_cells, dtype=np.int64),
-        "starts": np.concatenate([[0], np.cumsum(counts)]),
-        "members": (
-            np.concatenate(
-                [np.asarray(cell_map[c], dtype=np.int32) for c in sorted_cells]
-            )
-            if sorted_cells
-            else np.empty(0, dtype=np.int32)
-        ),
-        "level": level,
-    }
 
 
 def _gather_poly_points(pcells, keys, starts, members):
@@ -253,16 +178,12 @@ def geocode_pip_tile(
     fused plan is refused and the pipeline decomposes into
     geocode_pages + pip_join's shuffle cell-join (identical output).
     """
-    from .joins import BROADCAST_MAX_BYTES, choose_level, estimate_build_bytes, pip_join
-
-    broadcast_threshold = BROADCAST_MAX_BYTES
-    if level is None:
-        level = choose_level(polys, poly_geom, grid)
-    if estimate_build_bytes(polys, poly_geom) > broadcast_threshold:
+    level, bc = _broadcast_index(polys, poly_id, poly_geom, grid, level)
+    if bc is None:
         from ..extract.geocode import geocode_pages
 
         pts = geocode_pages(pages)
-        out = pip_join(
+        out = joins.pip_join(
             pts, polys, point_id="page_id", x_col="x", y_col="y",
             poly_id=poly_id, poly_geom=poly_geom, level=level, grid=grid,
             broadcast=False, keep_cols=(["url"] if include_url else []),
@@ -273,7 +194,6 @@ def geocode_pip_tile(
             *(["url"] if include_url else []),
             "poly_id", "cell_id",
         )
-    bc = _cached_index_bc(polys, poly_id, poly_geom, grid, level)
     out_schema = _out_schema(polys, poly_id, include_url)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -360,24 +280,8 @@ def geocode_pip_tile_jvm(
     broadcast cell index (driver collect) is refused and the JVM-
     extracted points go through pip_join's shuffle cell-join instead.
     """
-    from .joins import BROADCAST_MAX_BYTES, choose_level, estimate_build_bytes, pip_join
-
-    broadcast_threshold = BROADCAST_MAX_BYTES
-    if level is None:
-        level = choose_level(polys, poly_geom, grid)
-    # a cache hit means the index already EXISTS for this dimension
-    # table — reusing it costs no new memory, so skip the estimate
-    # job regardless of which API built it (the kernel variant builds
-    # ungated by explicit user choice; the gate below only governs
-    # whether to pay for a NEW collect+broadcast)
-    cached = polys in _INDEX_CACHE and (
-        (poly_id, poly_geom, grid.x0, grid.y0, grid.span, level) in _INDEX_CACHE[polys]
-    )
-    use_broadcast = cached or (
-        estimate_build_bytes(polys, poly_geom) <= broadcast_threshold
-    )
-    if use_broadcast:
-        bc = _cached_index_bc(polys, poly_id, poly_geom, grid, level)
+    level, bc = _broadcast_index(polys, poly_id, poly_geom, grid, level)
+    use_broadcast = bc is not None
 
     # broadcast-kernel path: lax extraction (regex evaluated once; the
     # kernel's NaN mask restores the strict row set).  The shuffle
@@ -389,7 +293,7 @@ def geocode_pip_tile_jvm(
         else _extract_points_jvm(pages, include_url)
     )
     if not use_broadcast:
-        out = pip_join(
+        out = joins.pip_join(
             pts, polys, point_id="page_id", x_col="x", y_col="y",
             poly_id=poly_id, poly_geom=poly_geom, level=level, grid=grid,
             broadcast=False, keep_cols=(["url"] if include_url else []),
@@ -599,12 +503,10 @@ def geocode_pip_tile_hybrid(
     it wins.  Use this form only when the ring fraction is tiny AND
     python workers are scarce."""
     from ..cells.cellexpr import cell_id_expr
-    from .joins import choose_level
-
-    if level is None:
-        level = choose_level(polys, poly_geom, grid)
+    dim = joins.dimension(polys, poly_id, poly_geom, grid)
+    level = dim.level if level is None else level
     spark = pages.sparkSession
-    polys_rows = [(r[0], bytes(r[1])) for r in polys.select(poly_id, poly_geom).collect()]
+    polys_rows = dim.collected(polys)
     pid_type = polys.schema[poly_id].dataType.simpleString()
 
     cand_rows = []
@@ -628,7 +530,7 @@ def geocode_pip_tile_hybrid(
     bc_wkbs = spark.sparkContext.broadcast(wkbs)
 
     pts = _extract_points_jvm(pages, include_url).withColumn(
-        "__cell", cell_id_expr(F.col("x"), F.col("y"), level, grid)
+        "__cell", cell_id_expr("x", "y", level, grid)
     )
     px, py = F.col("x"), F.col("y")
     j = pts.join(F.broadcast(cand), "__cell").where(
@@ -645,7 +547,7 @@ def geocode_pip_tile_hybrid(
         "page_id",
         *(["url"] if include_url else []),
         "poly_id",
-        cell_id_expr(px, py, tile_level, grid).alias("cell_id"),
+        cell_id_expr("x", "y", tile_level, grid).alias("cell_id"),
     ]
     fast = j.where(in_inner).select(*out_cols)
 
@@ -755,22 +657,15 @@ def geocode_pip_tile_sql(
     aggregate evaluates per (candidate, edge) inside the JVM — for
     very high edge-count polygons the vectorized numpy kernel can win;
     measure per workload (BENCH/BASELINE.md records both)."""
-    from .joins import choose_level
-
-    if level is None:
-        level = choose_level(polys, poly_geom, grid)
     from ..cells.cellexpr import (
         cell_id_expr,
         pip_covers_expr,
         pip_covers_unrolled_flat_expr,
     )
-
+    dim = joins.dimension(polys, poly_id, poly_geom, grid)
+    level = dim.level if level is None else level
     spark = pages.sparkSession
-    rows = _candidate_rows(
-        [(r[0], bytes(r[1])) for r in polys.select(poly_id, poly_geom).collect()],
-        grid,
-        level,
-    )
+    rows = _candidate_rows(dim.collected(polys), grid, level)
     max_edges = max((len(r[2]) for r in rows), default=0)
     pid_type = polys.schema[poly_id].dataType.simpleString()
     cand = spark.createDataFrame(
@@ -795,7 +690,7 @@ def geocode_pip_tile_sql(
         )
 
     pts = _extract_points_jvm(pages, include_url).withColumn(
-        "__cell", cell_id_expr(F.col("x"), F.col("y"), level, grid)
+        "__cell", cell_id_expr("x", "y", level, grid)
     )
     px, py = F.col("x"), F.col("y")
     return (
@@ -819,6 +714,6 @@ def geocode_pip_tile_sql(
             "page_id",
             *(["url"] if include_url else []),
             "poly_id",
-            cell_id_expr(px, py, tile_level, grid).alias("cell_id"),
+            cell_id_expr("x", "y", tile_level, grid).alias("cell_id"),
         )
     )

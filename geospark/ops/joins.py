@@ -25,6 +25,7 @@ shuffle-size half of the problem; salting spreads the refine CPU.
 
 from __future__ import annotations
 
+import weakref
 from typing import Iterator, Optional
 
 import numpy as np
@@ -104,88 +105,181 @@ def _prepared(key, wkb: bytes) -> gpred.PreparedPolygon:
     return pp
 
 
-# level choice memoized per DataFrame object (same immutable-source
-# contract as the flagship index cache: identity implies identical
-# data only for snapshot-backed tables).  A long-running job probing
-# one dimension layer repeatedly pays the sample job once, not per
-# query.
-import weakref
+def _level_for_extents(ext, grid: CellGrid) -> int:
+    """Cell level from the build side's median bbox extent — cells ≈
+    the typical polygon size keep both the cover sets and the per-cell
+    candidate lists small.  The median is the lower one (rank
+    ⌈n/2⌉), the element percentile_approx(·, 0.5) returns."""
+    from ..cells.cellid import MAX_LEVEL
 
-_LEVEL_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+    ext = sorted(ext)
+    med = ext[(len(ext) + 1) // 2 - 1] if ext else 0.0
+    # bias 3 levels finer than the median polygon: candidate count
+    # falls ~4× per level while the (broadcast) cover set grows only
+    # linearly with polygon perimeter — measured sweet spot.  A zero
+    # median (point-like build side) sizes cells at 1.0.
+    return min(grid.level_for_size(med or 1.0) + 3, MAX_LEVEL)
 
 
 def choose_level(polys: DataFrame, geom_col: str, grid: CellGrid, sample: int = 1000) -> int:
-    """Pick the cell level from the build side's median bbox extent —
-    cells ≈ the typical polygon size keep both the cover sets and the
-    per-cell candidate lists small."""
-    key = (geom_col, grid.x0, grid.y0, grid.span, sample)
-    per_df = _LEVEL_CACHE.setdefault(polys, {})
-    if key in per_df:
-        return per_df[key]
+    """Pick the cell level from the first `sample` build rows (one job;
+    only the extents reach the driver)."""
     from ..functions import st_envelope
 
-    s = (
+    rows = (
         polys.select(st_envelope(F.col(geom_col)).alias("e"))
-        .select(
-            (F.col("e.xmax") - F.col("e.xmin")).alias("w"),
-            (F.col("e.ymax") - F.col("e.ymin")).alias("h"),
-        )
+        .select(F.greatest(F.col("e.xmax") - F.col("e.xmin"), F.col("e.ymax") - F.col("e.ymin")))
         .limit(sample)
-        .agg(
-            F.expr("percentile_approx(greatest(w, h), 0.5)").alias("med"),
-        )
-        .collect()[0]
+        .collect()
     )
-    med = s["med"] or 1.0
-    # bias 3 levels finer than the median polygon: candidate count
-    # falls ~4× per level while the (broadcast) cover set grows only
-    # linearly with polygon perimeter — measured sweet spot
-    from ..cells.cellid import MAX_LEVEL
-
-    lvl = min(grid.level_for_size(max(med, 1e-9)) + 3, MAX_LEVEL)
-    per_df[key] = lvl
-    return lvl
+    return _level_for_extents([r[0] for r in rows if r[0] is not None], grid)
 
 
-# Small-dimension fast path: one LIMIT-gated collect answers level
-# choice, the broadcast size gate AND supplies the broadcast rows —
-# replacing three separate driver jobs (choose_level sample, size
-# estimate, map collect; measured ~0.9s of fixed per-query cost at
-# local[32] on a 25-row dimension table).  Level is replayed from
-# choose_level's formula with an exact driver-side median — the level
-# affects candidate volume only, never the refined output.
+def build_cell_index(polys_rows, grid: CellGrid, level: int) -> dict:
+    """The CSR cover of (id, WKB) rows at `level`: sorted cell keys,
+    and per key a slice members[starts[k]:starts[k+1]] of int32
+    indexes into the rows, so a probe resolves every cell of a batch
+    with ONE np.searchsorted.  Also carries pids, wkbs and envelopes
+    (empty geometries: no cells and an inverted box)."""
+    from collections import defaultdict
+
+    from ..cells.coverage import cover_geometry
+
+    pids, wkbs, envs = [], [], []
+    cell_map = defaultdict(list)
+    for i, (pid, wkb) in enumerate(polys_rows):
+        g = gc.from_wkb(wkb)
+        for cid in cover_geometry(g, grid, level):
+            cell_map[int(cid)].append(i)
+        pids.append(pid)
+        wkbs.append(wkb)
+        envs.append(g.envelope() or (np.inf, np.inf, -np.inf, -np.inf))
+    sorted_cells = sorted(cell_map)
+    counts = np.asarray([len(cell_map[c]) for c in sorted_cells], dtype=np.int64)
+    return {
+        "pids": np.asarray(pids),
+        "wkbs": wkbs,
+        "envs": np.asarray(envs, dtype=np.float64).reshape(-1, 4),
+        "cell_keys": np.asarray(sorted_cells, dtype=np.int64),
+        "starts": np.concatenate([[0], np.cumsum(counts)]),
+        "members": (
+            np.concatenate([np.asarray(cell_map[c], dtype=np.int32) for c in sorted_cells])
+            if sorted_cells
+            else np.empty(0, dtype=np.int32)
+        ),
+        "level": level,
+    }
+
+
+# One dimension-index cache for every join against a fixed dimension
+# layer (the flagship, pip_join, predicate_join): a long-running job
+# probes one layer with batch after batch and should pay the collect,
+# the level choice, the size estimate, the driver-side cover and its
+# broadcast ONCE, not per call.  Weak keys: dropping the DataFrame
+# drops its entries, and a finalizer UNPERSISTS their broadcasts.
+#
+# CONTRACT: identity implies identical data only for DataFrames over
+# immutable sources.  A DataFrame whose underlying files are
+# re-written in place (overwritten parquet path, replaced temp view)
+# would return a STALE index — cached dimension tables must be backed
+# by immutable snapshots (the Iceberg-snapshot discipline the pipeline
+# runner already follows).
+_DIMENSIONS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+# Small dimensions are answered by one LIMIT-gated collect: it gives
+# the rows, the level (exact median) and the size estimate at once.
+# Larger ones pay choose_level's and estimate_build_bytes's jobs.
 _SMALL_DIM_ROWS = 1024
 
 
-def _level_from_wkbs(wkbs, grid: CellGrid) -> int:
-    from ..cells.cellid import MAX_LEVEL
+class _Dimension:
+    """What the joins know about one dimension DataFrame: its rows
+    (None until needed when large), level, estimated broadcast bytes,
+    and per level one CSR cover, its broadcast and its build frames."""
 
-    ext = []
-    for w in wkbs:
-        env = gc.from_wkb(w).envelope()
-        if env:
-            ext.append(max(env[2] - env[0], env[3] - env[1]))
-    med = float(np.median(ext)) if ext else 1.0
-    return min(grid.level_for_size(max(med, 1e-9)) + 3, MAX_LEVEL)
+    def __init__(self, polys, poly_id, poly_geom, grid):
+        self.key = (poly_id, poly_geom, grid)
+        head = polys.select(poly_id, poly_geom).limit(_SMALL_DIM_ROWS + 1).collect()
+        self.small = len(head) <= _SMALL_DIM_ROWS
+        self.rows = None
+        if self.small:
+            # NULL geometries can never satisfy a predicate
+            self.rows = [(r[0], bytes(r[1])) for r in head if r[1] is not None]
+            envs = [gc.from_wkb(w).envelope() for _, w in self.rows]
+            self.level = _level_for_extents([max(e[2] - e[0], e[3] - e[1]) for e in envs if e], grid)
+            self.build_bytes = sum(len(w) + 64 for _, w in self.rows)
+        else:
+            self.level = choose_level(polys, poly_geom, grid)
+            self.build_bytes = estimate_build_bytes(polys, poly_geom)
+        self.covers: dict = {}  # level -> (index, broadcast)
+        self.frames: dict = {}  # (level, with_wkb) -> build DataFrame
+
+    def collected(self, polys) -> list:
+        """Every (id, WKB) row with a geometry, collected once."""
+        if self.rows is None:
+            poly_id, poly_geom, _ = self.key
+            self.rows = [
+                (r[0], bytes(r[1]))
+                for r in polys.select(poly_id, poly_geom).collect()
+                if r[1] is not None
+            ]
+        return self.rows
+
+    def cover(self, polys, level: int):
+        """(CSR index, its broadcast) at `level`."""
+        c = self.covers.get(level)
+        if c is None:
+            index = build_cell_index(self.collected(polys), self.key[2], level)
+            c = self.covers[level] = (index, polys.sparkSession.sparkContext.broadcast(index))
+        return c
+
+    def build_frame(self, polys, level: int, with_wkb: bool) -> DataFrame:
+        """The cover as a (__cell, __pid[, __pwkb]) DataFrame: a local
+        relation with exact statistics, so the planner sees its size."""
+        key = (level, with_wkb)
+        if key not in self.frames:
+            index, _ = self.cover(polys, level)
+            members = index["members"]
+            cols = {
+                "__cell": np.repeat(index["cell_keys"], np.diff(index["starts"])),
+                "__pid": index["pids"][members],
+            }
+            schema = f"__cell long, __pid {polys.schema[self.key[0]].dataType.simpleString()}"
+            if with_wkb:
+                cols["__pwkb"] = [index["wkbs"][m] for m in members]
+                schema += ", __pwkb binary"
+            self.frames[key] = polys.sparkSession.createDataFrame(pd.DataFrame(cols), schema)
+        return self.frames[key]
 
 
-def _small_dim_plan(polys, poly_id, poly_geom, grid, level, broadcast, threshold):
-    """Resolve (level, broadcast, rows) with one driver job when the
-    dimension table is small; rows is None when the table exceeds the
-    limit (callers fall back to the sampled jobs)."""
-    probe = polys.select(poly_id, poly_geom).limit(_SMALL_DIM_ROWS + 1).collect()
-    if len(probe) > _SMALL_DIM_ROWS:
-        if level is None:
-            level = choose_level(polys, poly_geom, grid)
-        if broadcast is None:
-            broadcast = estimate_build_bytes(polys, poly_geom) <= threshold
-        return level, broadcast, None
-    rows = [(r[0], bytes(r[1])) for r in probe if r[1] is not None]
-    if level is None:
-        level = _level_from_wkbs([w for _, w in rows], grid)
-    if broadcast is None:
-        broadcast = sum(len(w) + 64 for _, w in rows) <= threshold
-    return level, broadcast, rows
+def _release(per_df: dict) -> None:
+    # unpersist, NOT destroy: a result DataFrame returned to the
+    # caller closes over the broadcast and may outlive the dimension
+    # DataFrame object that keyed the cache — destroy() would make
+    # serializing its tasks throw INTERNAL_ERROR_BROADCAST.  unpersist
+    # frees the executor copies eagerly; a surviving plan that still
+    # needs the broadcast re-fetches it from the driver, and full
+    # teardown is left to the ContextCleaner once the last closure
+    # reference drops.
+    for dim in per_df.values():
+        for _, bc in dim.covers.values():
+            try:
+                bc.unpersist(blocking=False)
+            except Exception:
+                pass
+    per_df.clear()
+
+
+def dimension(polys: DataFrame, poly_id: str, poly_geom: str, grid: CellGrid) -> _Dimension:
+    """The cached _Dimension of `polys` (built on first use)."""
+    per_df = _DIMENSIONS.get(polys)
+    if per_df is None:
+        per_df = _DIMENSIONS[polys] = {}
+        weakref.finalize(polys, _release, per_df)
+    key = (poly_id, poly_geom, grid.x0, grid.y0, grid.span)
+    if key not in per_df:
+        per_df[key] = _Dimension(polys, poly_id, poly_geom, grid)
+    return per_df[key]
 
 
 def pip_join(
@@ -219,22 +313,27 @@ def pip_join(
     intersects/covers(poly,pt) → loc != EXTERIOR; contains → strict
     interior; touches → boundary (index.clj:145-160 refine modes).
 
+    broadcast: None picks by the build side's size estimate.  True
+    ships each polygon once per executor in a broadcast map and hints
+    a broadcast join.  False selects the cell-join plan WITHOUT the
+    broadcast polygon map (each candidate row carries its WKB); the
+    join strategy is then Spark's, and Spark/AQE may still broadcast a
+    small build side (500 districts: shuffle write ≈ 0).
+
     cell_col: a pre-computed probe cell column at exactly `level` —
     lets the caller fuse the cell encode into an upstream python
     stage (one fewer JVM↔Python hop).
     tile_level: fuse Z-order tile assignment into the refine stage —
     output gains a `cell_id` column with no extra python stage.
     """
-    spark = points.sparkSession
-    small_rows = None
-    if level is None or broadcast is None:
+    dim = dimension(polys, poly_id, poly_geom, grid)
+    if level is None:
+        level = dim.level
+    if broadcast is None:
         # size-gate the collect-based plan ONLY for the default: an
         # explicit True from a caller who knows the build side is small
-        # is honored (and skips the estimate job); explicit False keeps
-        # the shuffle cell-join
-        level, broadcast, small_rows = _small_dim_plan(
-            polys, poly_id, poly_geom, grid, level, broadcast, broadcast_threshold
-        )
+        # is honored; explicit False keeps the cell-join
+        broadcast = dim.build_bytes <= broadcast_threshold
 
     # bbox_prefilter: carry the build bbox (FLATTENED doubles — a
     # struct column through the broadcast join measured +0.7s/256M
@@ -246,19 +345,10 @@ def pip_join(
     # (2M of 256M rows; the probe scan, not the socket, dominates).
     # Net positive only when the candidate fraction is high, so it is
     # opt-in rather than default.
-    if small_rows is not None and broadcast and not bbox_prefilter:
-        # collected small dimension: build the (cell, pid) table on the
-        # driver (same cover_geometry cells as the cover_cells UDF) —
-        # removes the build side's python stage from the timed path
-        from ..cells.coverage import cover_geometry
-
-        pid_type = polys.schema[poly_id].dataType.simpleString()
-        pairs = [
-            (int(cid), pid)
-            for pid, wkb in small_rows
-            for cid in cover_geometry(gc.from_wkb(wkb), grid, level)
-        ]
-        build = spark.createDataFrame(pairs, f"__cell long, __pid {pid_type}")
+    if dim.small and not bbox_prefilter:
+        # the cached driver-side cover (same cover_geometry cells as
+        # the cover_cells UDF) — no python stage on the build side
+        build = dim.build_frame(polys, level, with_wkb=not broadcast)
     elif not bbox_prefilter:
         build = polys.select(
             F.col(poly_id).alias("__pid"),
@@ -285,27 +375,30 @@ def pip_join(
         )
     poly_bc = None
     if broadcast:
-        # ship each polygon ONCE per executor via a broadcast dict —
-        # carrying WKB through the join would duplicate it per
-        # candidate row (measured 4× refine slowdown from Arrow bytes)
-        poly_map = (
-            dict(small_rows)
-            if small_rows is not None
-            else {r[0]: r[1] for r in polys.select(poly_id, poly_geom).collect()}
-        )
-        poly_bc = spark.sparkContext.broadcast(poly_map)
+        # ship each polygon ONCE per executor — carrying WKB through
+        # the join would duplicate it per candidate row (measured 4×
+        # refine slowdown from Arrow bytes).  Small dimensions reuse
+        # the cached cover's broadcast; large ones skip the driver-side
+        # cover and broadcast just the collected rows.
+        if dim.small:
+            poly_bc = dim.cover(polys, level)[1]
+        else:
+            rows = dim.collected(polys)
+            poly_bc = points.sparkSession.sparkContext.broadcast(
+                {"pids": [p for p, _ in rows], "wkbs": [w for _, w in rows]}
+            )
         build = build.drop("__pwkb")
     keep_cols = [c for c in (keep_cols or []) if c not in (point_id,)]
     # probe-side cell assignment is PURE CATALYST (cellexpr is
     # property-tested bit-identical to the numpy encoder): the probe
     # is the big side, and a pandas UDF here would put every point
     # through the python socket before the join even starts
-    from ..cells.cellexpr import cell_id_expr
+    from ..cells.cellexpr import cell_id_expr, sql_col
 
     cell_expr = (
         F.col(cell_col)
         if cell_col is not None
-        else cell_id_expr(F.col(x_col), F.col(y_col), level, grid)
+        else cell_id_expr(sql_col(x_col), sql_col(y_col), level, grid)
     )
     probe = points.select(
         F.col(point_id).alias("__qid"),
@@ -352,6 +445,7 @@ def pip_join(
     out_schema = StructType(out_fields)
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        wkb_of = None
         for pdf in batches:
             n = len(pdf)
             if n == 0:
@@ -365,7 +459,9 @@ def pip_join(
             py = pdf["__y"].to_numpy(np.float64)[order]
             qid = pdf["__qid"].to_numpy()[order]
             if poly_bc is not None:
-                wkb_of = poly_bc.value
+                if wkb_of is None:
+                    v = poly_bc.value
+                    wkb_of = dict(zip(v["pids"], v["wkbs"]))
             else:
                 wkb_col = pdf["__pwkb"].to_numpy()[order]
             bounds = np.flatnonzero(np.r_[True, pid[1:] != pid[:-1], True])
@@ -422,16 +518,16 @@ def predicate_join(
     overlapping, covered-by (index.clj:145-160).
     `predicate` orientation: predicate(left_geom, right_geom).
     """
-    small_rows = None
-    if level is None or broadcast is None:
+    dim = dimension(right, right_id, right_geom, grid)
+    if level is None:
+        level = dim.level
+    if broadcast is None:
         # gate only the default; explicit True/False is the caller's call
-        level, broadcast, small_rows = _small_dim_plan(
-            right, right_id, right_geom, grid, level, broadcast, broadcast_threshold
-        )
+        broadcast = dim.build_bytes <= broadcast_threshold
     if broadcast:
         return _predicate_join_broadcast(
-            left, right, left_id, left_geom, right_id, right_geom,
-            predicate, level, grid, rows=small_rows,
+            left, left_id, left_geom, right.schema[right_id].dataType,
+            predicate, level, grid, dim.cover(right, level)[1],
         )
     build = right.select(
         F.col(right_id).alias("__rid"),
@@ -525,73 +621,23 @@ def predicate_join(
 
 def _predicate_join_broadcast(
     left: DataFrame,
-    right: DataFrame,
     left_id: str,
     left_geom: str,
-    right_id: str,
-    right_geom: str,
+    right_id_type,
     predicate: str,
     level: int,
     grid: CellGrid,
-    rows=None,
+    bc,
 ) -> DataFrame:
-    """Broadcast-index plan: cell→right-geometry index shipped once per
-    executor, one python stage over the left side, zero shuffles."""
-    from collections import defaultdict
-
-    from ..cells.coverage import cover_geometry
-
+    """Broadcast-index plan: the right side's cached CSR cover (bc, from
+    build_cell_index) shipped once per executor, one python stage over
+    the left side, zero shuffles."""
     fn = _PRED_FNS[predicate]
-    # NULL geometries can never satisfy a predicate — skip them here
-    # (the shuffle path and pip_join tolerate them the same way);
-    # rows from the small-dim fast path are already NULL-filtered
-    if rows is None:
-        rows = [
-            (r[0], bytes(r[1]))
-            for r in right.select(right_id, right_geom).collect()
-            if r[1] is not None
-        ]
-    rids, geoms, envs = [], [], []
-    cell_map = defaultdict(list)
-    for rid, wkb in rows:
-        g = gc.from_wkb(wkb)
-        if g.is_empty():
-            continue
-        # index into the COMPACTED arrays (empties are skipped above,
-        # so the raw row position would misalign)
-        idx = len(rids)
-        for cid in cover_geometry(g, grid, level):
-            cell_map[int(cid)].append(idx)
-        rids.append(rid)
-        geoms.append(wkb)
-        envs.append(g.envelope())
-    # CSR layout: sorted cell keys + concatenated member slices — lets
-    # the probe resolve EVERY (row, cell) lookup of a batch with one
-    # np.searchsorted instead of a python dict probe per cell
-    sorted_cells = sorted(cell_map)
-    cell_keys = np.asarray(sorted_cells, dtype=np.int64)
-    counts = np.asarray([len(cell_map[c]) for c in sorted_cells], dtype=np.int64)
-    starts = np.concatenate([[0], np.cumsum(counts)])
-    members = (
-        np.concatenate([np.asarray(cell_map[c], dtype=np.int32) for c in sorted_cells])
-        if sorted_cells
-        else np.empty(0, dtype=np.int32)
-    )
-    index = {
-        "rids": rids,
-        "wkbs": geoms,
-        "envs": np.asarray(envs, dtype=np.float64).reshape(-1, 4),
-        "cell_keys": cell_keys,
-        "starts": starts,
-        "members": members,
-    }
-    bc = left.sparkSession.sparkContext.broadcast(index)
-
     probe = left.select(F.col(left_id).alias("__lid"), F.col(left_geom).alias("__lwkb"))
     out_schema = StructType(
         [
             StructField("left_id", probe.schema["__lid"].dataType),
-            StructField("right_id", right.schema[right_id].dataType),
+            StructField("right_id", right_id_type),
         ]
     )
     nside = 1 << level
@@ -604,7 +650,7 @@ def _predicate_join_broadcast(
         idx = bc.value
         wkbs = idx["wkbs"]
         benvs = idx["envs"]
-        rids_ = idx["rids"]
+        pids_ = idx["pids"]
         keys = idx["cell_keys"]
         starts_ = idx["starts"]
         members_ = idx["members"]
@@ -659,10 +705,10 @@ def _predicate_join_broadcast(
             )
             midx = members_[np.repeat(starts_[hpos], mcnt) + moff].astype(np.int64)
             # dedupe (row, member) pairs from multi-cell hits
-            pairkey = mrow * np.int64(len(rids_)) + midx
+            pairkey = mrow * np.int64(len(pids_)) + midx
             uniq = np.unique(pairkey)
-            urow = (uniq // len(rids_)).astype(np.int64)
-            umem = (uniq % len(rids_)).astype(np.int64)
+            urow = (uniq // len(pids_)).astype(np.int64)
+            umem = (uniq % len(pids_)).astype(np.int64)
             # vectorized envelope prefilter
             a = lenv[urow]
             b = benvs[umem]
@@ -680,7 +726,7 @@ def _predicate_join_broadcast(
                     geom_cache[m_] = gb
                 if fn(lgeoms[r_], gb):
                     keep_l.append(lids[r_])
-                    keep_r.append(rids_[m_])
+                    keep_r.append(pids_[m_])
             if keep_l:
                 yield pd.DataFrame({"left_id": keep_l, "right_id": keep_r})
 

@@ -41,7 +41,7 @@ def _env_cells_udf(grid: CellGrid, level: int):
     SPEC of the cover — the parity property test in
     tests/test_cells_crs.py pins the Catalyst expression to it.  The
     index math is intentionally the exact op order of
-    cellid.cell_xy / cellexpr.cell_xy_expr ((x−x0)/span·n, saturate,
+    cellid.cell_xy / cellexpr.cell_xy_sql ((x−x0)/span·n, saturate,
     truncate) so the twins are bit-identical at cell boundaries."""
     n = 1 << level
 
@@ -122,14 +122,13 @@ def knn_join(
         # rng=0 range queries pass an explicit level sized to the
         # typical build envelope instead
         level = grid.level_for_size(rng)
-    from ..cells.cellexpr import env_cells_expr
+    from ..cells.cellexpr import cell_id_sql, env_cells_expr, explode_cover3, sql_col, sql_double
 
-    def env_cells(x0, y0, x1, y1):
-        # pure-Catalyst cover: candidate generation stays inside
-        # whole-stage codegen; python appears only in the exact
-        # re-rank kernel (and not at all for point/point)
-        cols = [F.col(c) if isinstance(c, str) else c for c in (x0, y0, x1, y1)]
-        return env_cells_expr(*cols, level, grid)
+    # pure-Catalyst covers: candidate generation stays in the JVM;
+    # python appears only in the exact re-rank kernel (and not at all
+    # for point/point).  The probe envelope is expanded by rng.
+    r = sql_double(rng)
+    probe_env = (f"__qxmin - {r}", f"__qymin - {r}", f"__qxmax + {r}", f"__qymax + {r}")
 
     if query_geom is not None:
         qenv = query.select(
@@ -145,37 +144,29 @@ def knn_join(
             F.col("__env.ymax").alias("__qymax"),
         ).where(F.col("__qxmin").isNotNull())
     else:
-        qenv = query.select(
-            F.col(query_id).alias("__qid"),
-            F.lit(None).cast("binary").alias("__qwkb"),
-            F.col(qx).alias("__qxmin"),
-            F.col(qy).alias("__qymin"),
-            F.col(qx).alias("__qxmax"),
-            F.col(qy).alias("__qymax"),
+        # one selectExpr: a parsed string is one py4j call, while every
+        # Column operator is another round trip to the JVM
+        qenv = query.selectExpr(
+            f"{sql_col(query_id)} AS __qid",
+            "CAST(NULL AS BINARY) AS __qwkb",
+            f"{sql_col(qx)} AS __qxmin",
+            f"{sql_col(qy)} AS __qymin",
+            f"{sql_col(qx)} AS __qxmax",
+            f"{sql_col(qy)} AS __qymax",
         )
     # probe cells: the rng-expanded query envelope (⊇ every build
     # envelope within rect distance rng, since cell_size ≥ rng).
     # Point queries expanded by rng span ≤ 2·rng ≤ 2·cell_size per
     # axis whenever the level honors cell_size ≥ rng — their cover is
-    # a ≤3×3 grid, emitted by explode_cover3 in JIT-able codegen
+    # a ≤4×4 grid (3×3 plus one cell of float rounding at
+    # rng == cell_size), emitted by explode_cover3 in JIT-able codegen
     # (explode(env_cells_expr) is interpreted per row; same finding
     # as the build side below, and the query side is the BIG side in
     # batch-lookup workloads — measured 32× at 20M query points).
     # Geometry queries and caller-forced finer levels keep the
     # general HOF cover.
     if query_geom is None and grid.cell_size(level) >= rng:
-        from ..cells.cellexpr import explode_cover3
-
-        q = explode_cover3(
-            qenv,
-            F.col("__qxmin") - rng,
-            F.col("__qymin") - rng,
-            F.col("__qxmax") + rng,
-            F.col("__qymax") + rng,
-            level,
-            grid,
-            out_col="__cell",
-        )
+        q = explode_cover3(qenv, *probe_env, level, grid, out_col="__cell")
     else:
         q = qenv.select(
             "__qid",
@@ -184,14 +175,7 @@ def knn_join(
             "__qymin",
             "__qxmax",
             "__qymax",
-            F.explode(
-                env_cells(
-                    F.col("__qxmin") - rng,
-                    F.col("__qymin") - rng,
-                    F.col("__qxmax") + rng,
-                    F.col("__qymax") + rng,
-                )
-            ).alias("__cell"),
+            F.explode(env_cells_expr(*probe_env, level, grid)).alias("__cell"),
         )
 
     if build_geom is not None:
@@ -215,13 +199,15 @@ def knn_join(
             "__ymin",
             "__xmax",
             "__ymax",
-            F.explode(env_cells("__xmin", "__ymin", "__xmax", "__ymax")).alias("__cell"),
+            F.explode(
+                env_cells_expr("__xmin", "__ymin", "__xmax", "__ymax", level, grid)
+            ).alias("__cell"),
         )
     else:
         # point build side: the envelope is degenerate (xmin == xmax,
         # ymin == ymax), so its cover is exactly ONE cell — the cell
         # containing the point.  cell_id_expr replays the identical
-        # cell_xy_expr float pipeline (pack forms are property-tested
+        # cell_xy_sql float pipeline (pack forms are property-tested
         # bit-identical), so __cell values match env_cells_expr's
         # single-element cover exactly, while staying inside
         # whole-stage codegen: env_cells_expr's sequence × transform ×
@@ -230,39 +216,28 @@ def knn_join(
         # big point build side (measured at 150k rows: 0.85s for the
         # explode form vs scan floor 0.09s; knn 1.18s → 0.57s,
         # range_query 1.13s → 0.42s end-to-end).
-        from ..cells.cellexpr import cell_id_expr
-
-        b = build.select(
-            F.col(build_id).alias("__bid"),
-            F.col(bx).alias("__xmin"),
-            F.col(by).alias("__ymin"),
-            F.col(bx).alias("__xmax"),
-            F.col(by).alias("__ymax"),
-            F.lit(None).cast("binary").alias("__bwkb"),
-            cell_id_expr(F.col(bx), F.col(by), level, grid).alias("__cell"),
+        b = build.selectExpr(
+            f"{sql_col(build_id)} AS __bid",
+            f"{sql_col(bx)} AS __xmin",
+            f"{sql_col(by)} AS __ymin",
+            f"{sql_col(bx)} AS __xmax",
+            f"{sql_col(by)} AS __ymax",
+            "CAST(NULL AS BINARY) AS __bwkb",
+            f"{cell_id_sql(sql_col(bx), sql_col(by), level, grid)} AS __cell",
         )
 
-    def _axis_gap(lo_a, hi_a, lo_b, hi_b):
-        return F.greatest(F.lit(0.0), F.greatest(lo_b - hi_a, lo_a - hi_b))
+    def axis_gap(a):  # gap between the query's and the build's [min, max] on axis a
+        return f"greatest(0.0D, greatest(__{a}min - __q{a}max, __q{a}min - __{a}max))"
 
+    gx, gy = axis_gap("x"), axis_gap("y")
     cand = (
         q.join(b, on="__cell", how="inner")
-        .withColumn(
-            "__gx", _axis_gap(F.col("__qxmin"), F.col("__qxmax"), F.col("__xmin"), F.col("__xmax"))
-        )
-        .withColumn(
-            "__gy", _axis_gap(F.col("__qymin"), F.col("__qymax"), F.col("__ymin"), F.col("__ymax"))
-        )
         # g*g (not pow) keeps integer-coordinate distances bit-exact
-        .withColumn(
-            "__rect_dist",
-            F.sqrt(F.col("__gx") * F.col("__gx") + F.col("__gy") * F.col("__gy")),
-        )
-        .drop("__gx", "__gy")
+        .selectExpr("*", f"sqrt({gx} * {gx} + {gy} * {gy}) AS __rect_dist")
         # rng filter BEFORE the pair dedupe: the filter is a map-side
         # predicate, the dedupe a full shuffle — order matters at 47M
         # candidates
-        .where(F.col("__rect_dist") <= rng)
+        .where(f"__rect_dist <= {r}")
     )
     if build_geom is not None:
         # a (query, build) pair repeats only when the BUILD envelope
@@ -271,34 +246,25 @@ def knn_join(
         cand = cand.dropDuplicates(["__qid", "__bid"])
 
     if n is None:  # envelope/range query: no cut, no re-rank
-        return cand.select(
-            F.col("__qid").alias(query_id),
-            F.col("__bid").alias(build_id),
-            F.col("__rect_dist").alias("rect_dist"),
+        return cand.selectExpr(
+            f"__qid AS {sql_col(query_id)}", f"__bid AS {sql_col(build_id)}", "__rect_dist AS rect_dist"
         )
 
     # rect-distance top-n (the R-tree .nearest cut), then true-distance
     # re-rank (index.clj:102-103)
-    w_rect = Window.partitionBy("__qid").orderBy(F.col("__rect_dist").asc(), F.col("__bid").asc())
-    cand = cand.withColumn("__rrank", F.row_number().over(w_rect)).where(F.col("__rrank") <= n)
+    by_rect = "row_number() OVER (PARTITION BY __qid ORDER BY __rect_dist ASC, __bid ASC)"
+    cand = cand.selectExpr("*", f"{by_rect} AS __rrank").where(f"__rrank <= {int(n)}")
 
     if query_geom is None and build_geom is None:
         # point/point: the envelope IS the geometry, so rect distance
-        # equals true distance STATICALLY — skip the python re-rank
-        # stage entirely (the second window reuses the first one's
-        # partitioning, no extra exchange)
-        w_true = Window.partitionBy("__qid").orderBy(
-            F.col("__rect_dist").asc(), F.col("__bid").asc()
-        )
-        return (
-            cand.withColumn("rank", F.row_number().over(w_true))
-            .select(
-                F.col("__qid").alias(query_id),
-                F.col("__bid").alias(build_id),
-                F.col("__rect_dist").alias("rect_dist"),
-                F.col("__rect_dist").alias("dist"),
-                "rank",
-            )
+        # equals true distance STATICALLY — the rect rank is the final
+        # rank, with no python re-rank stage and no second window
+        return cand.selectExpr(
+            f"__qid AS {sql_col(query_id)}",
+            f"__bid AS {sql_col(build_id)}",
+            "__rect_dist AS rect_dist",
+            "__rect_dist AS dist",
+            "__rrank AS `rank`",
         )
 
     @F.pandas_udf(DoubleType())

@@ -62,13 +62,13 @@ def assign_tiles(
     (cells/cellexpr.py, bit-identical to cellid.pack), so tile
     assignment runs inside whole-stage codegen with no python worker
     or Arrow transfer at all."""
-    from ..cells.cellexpr import cell_id_expr
+    from ..cells.cellexpr import cell_id_expr, sql_col
 
     # ladder form: this is a Project stage (codegen CSE collapses the
     # duplicated float chain — plan-asserted in test_plans), where the
     # pure-ALU ladder measured 4× faster than the table lookups
     return df.withColumn(
-        out_col, cell_id_expr(F.col(x_col), F.col(y_col), level, grid, form="ladder")
+        out_col, cell_id_expr(sql_col(x_col), sql_col(y_col), level, grid, form="ladder")
     )
 
 
@@ -99,8 +99,8 @@ def rasterize(
 
     return r.select(
         "cell_id",
-        cell_ix_expr(F.col("cell_id")).alias("ix"),
-        cell_iy_expr(F.col("cell_id")).alias("iy"),
+        cell_ix_expr("cell_id").alias("ix"),
+        cell_iy_expr("cell_id").alias("iy"),
         "value",
     )
 

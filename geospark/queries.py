@@ -114,9 +114,9 @@ def q_tile_assign(spark, sf_dir) -> DataFrame:
     t = assign_tiles(d, level=TILE_LEVEL, grid=TILE_GRID)
     return t.select(
         "doc_id",
-        cell_ix_expr(F.col("cell_id")).alias("tile_ix"),
-        cell_iy_expr(F.col("cell_id")).alias("tile_iy"),
-        (cell_ix_expr(F.col("cell_id")) * 1024 + cell_iy_expr(F.col("cell_id"))).alias(
+        cell_ix_expr("cell_id").alias("tile_ix"),
+        cell_iy_expr("cell_id").alias("tile_iy"),
+        (cell_ix_expr("cell_id") * 1024 + cell_iy_expr("cell_id")).alias(
             "tile_id"
         ),
     )
@@ -1797,8 +1797,8 @@ def q_tile_rollup(spark, sf_dir) -> DataFrame:
     t = stream_tile_counts(e, "ts", level=TILE_LEVEL, window="1 hour", grid=TILE_GRID)
     return t.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        cell_ix_expr(F.col("cell_id")).alias("tile_ix"),
-        cell_iy_expr(F.col("cell_id")).alias("tile_iy"),
+        cell_ix_expr("cell_id").alias("tile_ix"),
+        cell_iy_expr("cell_id").alias("tile_iy"),
         F.col("n").cast("long").alias("n"),
     )
 

@@ -57,6 +57,10 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # timestamps format and bucket in UTC whatever the host's zone:
+        # hourly windows formatted after the aggregate (events_hourly)
+        # would otherwise repeat or skip an hour across DST changes
+        .config("spark.sql.session.timeZone", "UTC")
         # saveAsTable targets (bucketed tables, ops/bucketing.py) must
         # never land in the launch cwd; uid-scoped so two users on one
         # host don't collide on a sticky-bit /tmp directory

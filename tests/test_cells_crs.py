@@ -147,7 +147,7 @@ def test_cell_id_expr_matches_numpy(spark):
             for form in ("table", "ladder"):
                 got = (
                     df.select(
-                        cell_id_expr(F.col("x"), F.col("y"), level, grid, form).alias("c")
+                        cell_id_expr("x", "y", level, grid, form).alias("c")
                     )
                     .toPandas()["c"]
                     .to_numpy()
@@ -170,9 +170,9 @@ def test_cell_unpack_expr_matches_numpy(spark):
     cids = DEFAULT_GRID.encode_points(x, y, 16)
     df = spark.createDataFrame(pd.DataFrame({"c": cids}))
     got = df.select(
-        cell_ix_expr(F.col("c")).alias("ix"),
-        cell_iy_expr(F.col("c")).alias("iy"),
-        cell_level_expr(F.col("c")).alias("lvl"),
+        cell_ix_expr("c").alias("ix"),
+        cell_iy_expr("c").alias("iy"),
+        cell_level_expr("c").alias("lvl"),
     ).toPandas()
     lvl, ix, iy = unpack(cids)
     assert (got["ix"].to_numpy() == ix).all()
@@ -197,7 +197,7 @@ def test_cell_encode_nan_maps_to_cell_zero(spark):
     want = DEFAULT_GRID.encode_points(x, y, 14)
     df = spark.createDataFrame(pd.DataFrame({"x": x, "y": y}))
     got = (
-        df.select(cell_id_expr(F.col("x"), F.col("y"), 14, DEFAULT_GRID).alias("c"))
+        df.select(cell_id_expr("x", "y", 14, DEFAULT_GRID).alias("c"))
         .toPandas()["c"]
         .to_numpy()
     )
@@ -237,7 +237,7 @@ def test_env_cells_expr_matches_numpy_spec(spark):
     got = (
         df.select(
             env_cells_expr(
-                F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"), level, DEFAULT_GRID
+                "xmin", "ymin", "xmax", "ymax", level, DEFAULT_GRID
             ).alias("cells")
         )
         .toPandas()["cells"]
@@ -278,8 +278,8 @@ def test_point_cover_equals_cell_id_expr(spark):
     y[395:400] = np.nan
     df = spark.createDataFrame(pd.DataFrame({"x": x, "y": y}))
     out = df.select(
-        env_cells_expr(F.col("x"), F.col("y"), F.col("x"), F.col("y"), level, DEFAULT_GRID).alias("cover"),
-        cell_id_expr(F.col("x"), F.col("y"), level, DEFAULT_GRID).alias("cell"),
+        env_cells_expr("x", "y", "x", "y", level, DEFAULT_GRID).alias("cover"),
+        cell_id_expr("x", "y", level, DEFAULT_GRID).alias("cell"),
     ).toPandas()
     for i, (cover, cell) in enumerate(zip(out["cover"], out["cell"])):
         assert list(cover) == [cell], f"row {i}: {list(cover)} vs {cell}"
@@ -319,7 +319,7 @@ def test_explode_cover3_matches_general_cover(spark):
         {"row": np.arange(n), "xmin": x - r, "ymin": y - r, "xmax": x + r, "ymax": y + r}
     )
     df = spark.createDataFrame(pdf)
-    args = (F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"))
+    args = ("xmin", "ymin", "xmax", "ymax")
     general = (
         df.select("row", F.explode(env_cells_expr(*args, level, DEFAULT_GRID)).alias("c"))
         .toPandas().groupby("row")["c"].apply(list).to_dict()
@@ -332,3 +332,59 @@ def test_explode_cover3_matches_general_cover(spark):
     for i in general:
         assert set(general[i]) == set(fast[i]), f"row {i}"
         assert len(fast[i]) == len(set(fast[i])), f"row {i}: duplicates"
+
+
+def test_knn_cover_at_rng_equal_cell_size(spark):
+    """At rng == cell_size a point envelope expanded by rng spans 3
+    cells per axis in exact arithmetic, but float rounding of the cell
+    index can carry its upper bound one ulp into a fourth cell.  Query
+    points one ulp below a cell boundary hit that case; there the
+    kNN fast cover (explode_cover3) must still equal the general cover,
+    and knn_join must find the build point at rect distance exactly rng
+    that lies in the fourth cell."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from geospark.cells.cellexpr import env_cells_expr, explode_cover3
+    from geospark.cells.cellid import DEFAULT_GRID as grid
+    from geospark.ops.knn import knn_join
+
+    y = 1000.5
+    four = {}  # level -> query x whose expanded x-range spans 4 cells
+    for level in (6, 10, 12, 14):
+        c = grid.cell_size(level)
+        k = np.random.RandomState(level).randint(0, (1 << level) - 4, 20000)
+        boundary = grid.x0 + (k + 2) * c
+        qx = boundary - np.spacing(boundary)
+        lo, _ = grid.cell_xy(qx - c, qx, level)
+        hi, _ = grid.cell_xy(qx + c, qx, level)
+        if (hi - lo == 3).any():
+            four[level] = qx[hi - lo == 3][:5]
+    assert 14 in four, four  # the case exists at the benchmark's level
+
+    for level, xs in four.items():
+        c = grid.cell_size(level)
+        df = spark.createDataFrame(pd.DataFrame({
+            "row": np.arange(len(xs)), "xmin": xs - c, "ymin": y - c, "xmax": xs + c, "ymax": y + c,
+        }))
+        args = ("xmin", "ymin", "xmax", "ymax")
+        general = (
+            df.select("row", F.explode(env_cells_expr(*args, level, grid)).alias("c"))
+            .toPandas().groupby("row")["c"].apply(set).to_dict()
+        )
+        fast = (
+            explode_cover3(df, *args, level, grid, out_col="c")
+            .toPandas().groupby("row")["c"].apply(set).to_dict()
+        )
+        assert general == fast, level
+        assert all(len(v) == 12 for v in general.values())  # 4 × 3 cells
+
+    c = grid.cell_size(14)
+    qx = float(four[14][0])
+    bx = qx + c
+    assert bx - qx == c and grid.cell_xy(bx, y, 14)[0] == grid.cell_xy(qx - c, y, 14)[0] + 3
+    query = spark.createDataFrame(pd.DataFrame({"qid": [0], "x": [qx], "y": [y]}))
+    build = spark.createDataFrame(pd.DataFrame({"bid": [1, 2], "x": [bx, qx + 2 * c], "y": [y, y]}))
+    out = knn_join(query, build, n=5, rng=c).toPandas()
+    assert list(out["bid"]) == [1] and list(out["rect_dist"]) == [c]

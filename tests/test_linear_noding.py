@@ -13,6 +13,32 @@ def wkts(gs):
     return [C.to_wkt(g) for g in gs]
 
 
+def robust_polygon(cx, cy, r0, n, seed, spikes=0.0):
+    """Deterministic seven-lobed polygon of n vertices around (cx, cy),
+    radius r0 ± 30%, vertex radii jittered in full double precision;
+    spikes > 0 pushes every tenth vertex out by that much."""
+    r = np.random.RandomState(seed)
+    t = np.linspace(0.0, 2 * np.pi, n, endpoint=False)
+    rad = r0 * (1 + 0.3 * np.sin(7 * t)) * (1 + 0.05 * r.uniform(-1, 1, n))
+    rad[::10] += spikes
+    return C.polygon(np.column_stack([cx + rad * np.cos(t), cy + rad * np.sin(t)]))
+
+
+def ulp_nudged(g, seed, rotate=0.0):
+    """g's shell with each coordinate moved by -3, 0 or +3 ulps after
+    an optional rotation by `rotate` radians about its first vertex,
+    in reversed vertex order."""
+    xy = np.asarray(g.parts[0], dtype=np.float64)[:-1]
+    x0, y0 = xy[0]
+    c, s_ = np.cos(rotate), np.sin(rotate)
+    x = x0 + (xy[:, 0] - x0) * c - (xy[:, 1] - y0) * s_
+    y = y0 + (xy[:, 0] - x0) * s_ + (xy[:, 1] - y0) * c
+    r = np.random.RandomState(seed)
+    x = x + r.choice([-3, 0, 3], len(x)) * np.spacing(x)
+    y = y + r.choice([-3, 0, 3], len(y)) * np.spacing(y)
+    return C.polygon(np.column_stack([x, y])[::-1])
+
+
 class TestCutLine:
     # core_test.clj:139-184, bit-exact including reversed orientations
     def setup_method(self):
@@ -184,17 +210,18 @@ class TestOverlay:
 
     def test_overlay_robustness_fixtures(self):
         # core_test.clj:96-114 — float-limit polygons: no exception,
-        # valid output (values not asserted by the reference either)
-        import re
-
-        src = open("/root/reference/test/geometry/core_test.clj").read()
-        wkts_all = re.findall(r'read-wkt "(POLYGON \(\([^"]+)"', src)
-        big = [w for w in wkts_all if len(w) > 2000]
-        a, b = C.from_wkt(big[0]), C.from_wkt(big[1])
+        # valid output (values not asserted by the reference either).
+        # In-repo stand-ins at the reference cases' magnitudes: a large
+        # polygon at British National Grid metres against a copy whose
+        # vertices moved by a few ulps (near-coincident edges
+        # everywhere), and two lon/lat polygons near (117.25, 31.8)
+        # differing by an ulp-scale rotation
+        a = robust_polygon(530123.4567890123, 180456.7890123456, 1500.0, 160, seed=1)
+        b = ulp_nudged(a, seed=2)
         d = OV.difference(a, b)
         assert OV.is_valid(d)
-        ll = [w for w in wkts_all if "117.25" in w]
-        x, y = C.from_wkt(ll[0]), C.from_wkt(ll[1])
+        x = robust_polygon(117.25, 31.8321987654321, 0.05, 120, seed=3)
+        y = ulp_nudged(x, seed=4, rotate=1e-13)
         i = OV.intersection(x, y)
         assert O.area(i) >= 0.0
 
@@ -237,7 +264,10 @@ class TestBuffer:
     def test_buffer_validity_fixtures(self):
         # core_test.clj:116-120 — double-buffer the captured polygons,
         # assert validity only
-        p2 = C.from_wkt(open("/root/reference/test/geometry/polygon2.wkt").read().strip())
+        # stand-in for the captured polygon2.wkt: a jagged 300-vertex
+        # polygon in BNG metres with 30 m spikes a few metres wide, so
+        # the inward buffer cuts them off and the outward one regrows
+        p2 = robust_polygon(451234.56789012345, 206789.01234567891, 400.0, 300, seed=5, spikes=30.0)
         r2 = gbuffer(gbuffer(p2, -10, 2, cap="square", join="mitre", mitre_limit=2), 15, 2, cap="square", join="mitre", mitre_limit=2)
         assert OV.is_valid(r2)
 

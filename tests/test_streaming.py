@@ -204,3 +204,13 @@ def test_dedup_stream_drops_exact_rearrivals(spark, tmp_path):
         spark.read.parquet(src), watermark="10 minutes"
     ).toPandas()
     assert sorted(batch["text"]) == sorted(got["text"])
+
+
+def test_session_time_zone_is_utc(spark):
+    """build_session pins the session time zone: hourly windows
+    formatted after their aggregate (events_hourly) must not depend on
+    the host's zone or its DST changes."""
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    # 2023-10-29 01:30 UTC is inside Europe's DST fall-back hour
+    t = spark.sql("SELECT date_format(timestamp_seconds(1698543000), 'yyyy-MM-dd HH:mm') AS t")
+    assert t.collect()[0]["t"] == "2023-10-29 01:30"

@@ -52,7 +52,7 @@ def main():
     level = DEFAULT_GRID.level_for_size(2000.0)
     b = pts.select(
         F.col("c_custkey").alias("__bid"), "x", "y",
-        F.explode(env_cells_expr(F.col("x"), F.col("y"), F.col("x"), F.col("y"), level, DEFAULT_GRID)).alias("__cell"),
+        F.explode(env_cells_expr("x", "y", "x", "y", level, DEFAULT_GRID)).alias("__cell"),
     )
     spark.sparkContext.setJobDescription("b-side encode")
     t("b-side env_cells explode", b)
