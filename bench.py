@@ -59,14 +59,14 @@ def run(sf_dir: str, cpus: int, n_pages: int, n_districts: int = 2000):
     districts.persist().count()
     level = choose_level(districts, "geom", __import__("geospark.cells.cellid", fromlist=["DEFAULT_GRID"]).DEFAULT_GRID)
 
-    from geospark.ops.flagship import geocode_pip_tile_jvm
+    from geospark.ops.flagship import geocode_pip_tile
 
     def run_flagship() -> int:
         # JVM regexp extraction + one python stage for cells/PIP/tiles
         # (see ops/flagship.py); output verified identical to the
         # composable geocode_pages → pip_join → assign_tiles path
         pages = spark.read.parquet(pages_path)
-        return geocode_pip_tile_jvm(
+        return geocode_pip_tile(
             pages, districts, level=level, tile_level=14, include_url=False
         ).count()
 

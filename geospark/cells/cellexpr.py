@@ -258,107 +258,3 @@ def explode_cover3(
         .selectExpr("*", f"{_pack_sql(ix, iy, level)} AS {sql_col(out_col)}")
         .drop("__cv_ix0", "__cv_iy0", "__cv_ix1", "__cv_iy1", "__cv_k")
     )
-
-
-def pip_covers_expr(px: Column, py: Column, edges: Column) -> Column:
-    """covers(polygon, point) over an array<struct<x1,y1,x2,y2>> edge
-    column — the exact PreparedPolygon._locate_many semantics
-    (crossing number with explicit on-segment boundary test) as
-    higher-order array expressions.  Identical IEEE double op order to
-    the numpy kernel, so results are bit-identical."""
-
-    def on_segment(e):
-        cross = (e["x2"] - e["x1"]) * (py - e["y1"]) - (e["y2"] - e["y1"]) * (px - e["x1"])
-        return (
-            (cross == 0)
-            & (px >= F.least(e["x1"], e["x2"]))
-            & (px <= F.greatest(e["x1"], e["x2"]))
-            & (py >= F.least(e["y1"], e["y2"]))
-            & (py <= F.greatest(e["y1"], e["y2"]))
-        )
-
-    def crossing(acc, e):
-        cond = ((e["y1"] <= py) & (e["y2"] > py)) | ((e["y2"] <= py) & (e["y1"] > py))
-        # when cond holds, y1 != y2 — no division by zero
-        xint = e["x1"] + (py - e["y1"]) * (e["x2"] - e["x1"]) / (e["y2"] - e["y1"])
-        return acc + F.when(cond & (px < xint), F.lit(1)).otherwise(F.lit(0))
-
-    n_cross = F.aggregate(edges, F.lit(0), crossing)
-    return F.exists(edges, on_segment) | (n_cross % 2 == 1)
-
-
-def pip_covers_unrolled_flat_expr(
-    px: Column,
-    py: Column,
-    x1s: Column,
-    y1s: Column,
-    x2s: Column,
-    y2s: Column,
-    max_edges: int,
-) -> Column:
-    """covers(polygon, point) unrolled over four flat array<double>
-    edge-coordinate columns — the smallest codegen form (plain
-    GetArrayItem leaves, boolean-parity XOR instead of an integer
-    sum).  Same exact semantics and IEEE op order as
-    PreparedPolygon._locate_many; NULL beyond a polygon's edge count
-    coalesces to the term identity.
-
-    MEASURED CAVEAT (BENCH/BASELINE.md): at ~17 edges the generated
-    filter method exceeds HotSpot's JIT compile size limit and runs as
-    interpreted bytecode — 10× slower than the numpy kernel and slower
-    even than the interpreted HOF form.  Only worth considering for
-    very low edge counts (boxes)."""
-    on_any = F.lit(False)
-    parity = F.lit(False)
-    for j in range(max_edges):
-        x1, y1 = F.get(x1s, j), F.get(y1s, j)
-        x2, y2 = F.get(x2s, j), F.get(y2s, j)
-        cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
-        on = (
-            (cross == 0)
-            & (px >= F.least(x1, x2))
-            & (px <= F.greatest(x1, x2))
-            & (py >= F.least(y1, y2))
-            & (py <= F.greatest(y1, y2))
-        )
-        on_any = on_any | F.coalesce(on, F.lit(False))
-        cond = ((y1 <= py) & (y2 > py)) | ((y2 <= py) & (y1 > py))
-        xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
-        hit = F.coalesce(cond & (px < xint), F.lit(False))
-        parity = parity != hit
-    return on_any | parity
-
-
-def pip_covers_unrolled_expr(px: Column, py: Column, edges: Column, max_edges: int) -> Column:
-    """Same covers(polygon, point) semantics as pip_covers_expr, but
-    UNROLLED over literal edge indices instead of higher-order
-    lambdas: GetArrayItem / GetStructField are whole-stage-codegen
-    expressions, whereas ArrayAggregate / ArrayExists are
-    CodegenFallback (interpreted per element) — measured 2.5× slower
-    than the numpy kernel on the flagship, while the unrolled form is
-    the fastest plan (BENCH/BASELINE.md).
-
-    Out-of-range F.get beyond a polygon's actual edge count reads NULL
-    (unlike [] indexing, which throws under ANSI mode); every term
-    coalesces NULL to its identity (False / +0), so padding is
-    unnecessary.  max_edges bounds the expression size — keep it
-    modest (≤ ~64) or codegen method-size limits degrade the generated
-    code."""
-    on_any = F.lit(False)
-    n_cross = F.lit(0)
-    for j in range(max_edges):
-        e = F.get(edges, j)
-        x1, y1, x2, y2 = e["x1"], e["y1"], e["x2"], e["y2"]
-        cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
-        on = (
-            (cross == 0)
-            & (px >= F.least(x1, x2))
-            & (px <= F.greatest(x1, x2))
-            & (py >= F.least(y1, y2))
-            & (py <= F.greatest(y1, y2))
-        )
-        on_any = on_any | F.coalesce(on, F.lit(False))
-        cond = ((y1 <= py) & (y2 > py)) | ((y2 <= py) & (y1 > py))
-        xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
-        n_cross = n_cross + F.when(cond & (px < xint), F.lit(1)).otherwise(F.lit(0))
-    return on_any | (n_cross % 2 == 1)

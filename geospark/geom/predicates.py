@@ -29,6 +29,10 @@ from .ops import _linework, area, centroid, parts_of, polygons_of
 
 EXTERIOR, BOUNDARY, INTERIOR = 0, 1, 2
 
+# (point, edge) rows per vectorized chunk in locate_batch and
+# locate_pairs: bounds each chunk's temporaries to a few hundred MB
+_CHUNK_ROWS = 4_000_000
+
 
 # ---------------------------------------------------------------------------
 # prepared polygon: vectorized point-location
@@ -110,7 +114,7 @@ class PreparedPolygon:
                 out[i] = self._locate_one(px[i], py[i], e)
             return out
         # full vectorization (many points): chunk points to bound memory
-        CH = max(1, 4_000_000 // max(1, len(self.x1)))
+        CH = max(1, _CHUNK_ROWS // max(1, len(self.x1)))
         for s in range(0, len(idx), CH):
             sel = idx[s : s + CH]
             out[sel] = self._locate_many(px[sel], py[sel])
@@ -166,6 +170,57 @@ class PreparedPolygon:
 
     def contains_strict_batch(self, px, py) -> np.ndarray:
         return self.locate_batch(px, py) == INTERIOR
+
+
+def locate_pairs(px, py, box, lo, hi, x1, y1, x2, y2, edge_ids=None) -> np.ndarray:
+    """Point location of many (point, polygon) pairs in one vectorized
+    pass: pair i locates (px[i], py[i]) against the edges
+    edge_ids[lo[i]:hi[i]] of the concatenated edge arrays x1, y1, x2,
+    y2 (edges lo[i]:hi[i] when edge_ids is None), and is EXTERIOR
+    outside its polygon's bbox box[i] = (xmin, ymin, xmax, ymax).
+
+    The arithmetic is PreparedPolygon._locate_many's, op for op, over
+    flattened (pair, edge) rows reduced per pair with np.bincount.  An
+    edge changes a point's answer only if min(y1, y2) <= py <= max(y1,
+    y2) and px is not right of it, so any edge set that holds those
+    edges gives locate_batch's answer exactly."""
+    out = np.zeros(len(px), dtype=np.int8)
+    cnt = hi - lo
+    live = np.flatnonzero(
+        (cnt > 0)
+        & (px >= box[:, 0]) & (px <= box[:, 2])
+        & (py >= box[:, 1]) & (py <= box[:, 3])
+    )
+    cnt = cnt[live]
+    ends = np.cumsum(cnt)
+    s = 0
+    while s < len(live):
+        # chunk: consecutive pairs holding at most _CHUNK_ROWS edge rows
+        e = max(s + 1, int(np.searchsorted(ends, ends[s] - cnt[s] + _CHUNK_ROWS, "right")))
+        sel, c = live[s:e], cnt[s:e]
+        row = np.repeat(np.arange(len(sel)), c)
+        eid = np.repeat(lo[sel] - (np.cumsum(c) - c), c) + np.arange(len(row))
+        if edge_ids is not None:
+            eid = edge_ids[eid]
+        ex1, ey1, ex2, ey2 = x1[eid], y1[eid], x2[eid], y2[eid]
+        PX, PY = px[sel][row], py[sel][row]
+        cross = (ex2 - ex1) * (PY - ey1) - (ey2 - ey1) * (PX - ex1)
+        on = (
+            (cross == 0)
+            & (PX >= np.minimum(ex1, ex2))
+            & (PX <= np.maximum(ex1, ex2))
+            & (PY >= np.minimum(ey1, ey2))
+            & (PY <= np.maximum(ey1, ey2))
+        )
+        cond = ((ey1 <= PY) & (ey2 > PY)) | ((ey2 <= PY) & (ey1 > PY))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = ex1 + (PY - ey1) * (ex2 - ex1) / (ey2 - ey1)
+        crossings = np.bincount(row[cond & (PX < xint)], minlength=len(sel))
+        res = np.where(crossings % 2 == 1, INTERIOR, EXTERIOR).astype(np.int8)
+        res[np.bincount(row[on], minlength=len(sel)) > 0] = BOUNDARY
+        out[sel] = res
+        s = e
+    return out
 
 
 def _poly_rings(g: Geometry):

@@ -135,39 +135,99 @@ def choose_level(polys: DataFrame, geom_col: str, grid: CellGrid, sample: int = 
     return _level_for_extents([r[0] for r in rows if r[0] is not None], grid)
 
 
+# Band bounds are widened by this many ulps of the largest coordinate
+# in play (the grid's corners and the polygon's vertices).  That covers
+# the float rounding of the cell encode, which can put a point a few
+# ulps outside its cell's exact bounds, and of the crossing test's
+# x-intercept, which can land a few ulps right of its edge's max x.  A
+# wider margin only adds edges; a narrower one can drop a deciding one.
+_BAND_ULPS = 64
+
+
 def build_cell_index(polys_rows, grid: CellGrid, level: int) -> dict:
     """The CSR cover of (id, WKB) rows at `level`: sorted cell keys,
     and per key a slice members[starts[k]:starts[k+1]] of int32
     indexes into the rows, so a probe resolves every cell of a batch
     with ONE np.searchsorted.  Also carries pids, wkbs and envelopes
-    (empty geometries: no cells and an inverted box)."""
-    from collections import defaultdict
+    (empty geometries: no cells and an inverted box).
 
+    Point-in-polygon refine data for gpred.locate_pairs: the polygons'
+    concatenated edge arrays ex1, ey1, ex2, ey2, their edge bboxes
+    `ebox`, and per CSR entry j = starts[k] + m the edge list
+    band[band_lo[j]:band_hi[j]]: the member's edges whose y-span meets
+    cell k's y-range and whose max x reaches the cell's x-min, i.e.
+    every edge that can decide a point in the cell.  The entries of one
+    (polygon, cell row) share one list sorted by max x descending, so
+    each cell's list is a prefix of it; building it row by row never
+    holds more than one row's edge mask.  Bounds are widened by
+    _BAND_ULPS and open on the grid's border rows and columns, where
+    cell_xy clamps out-of-domain points."""
+    from ..cells.cellid import unpack
     from ..cells.coverage import cover_geometry
 
-    pids, wkbs, envs = [], [], []
-    cell_map = defaultdict(list)
+    nside = 1 << level
+    cs = grid.cell_size(level)
+    gmax = max(abs(grid.x0), abs(grid.y0), abs(grid.x0 + grid.span), abs(grid.y0 + grid.span))
+    pids, wkbs, envs, preps = [], [], [], []
+    cells, owners, lo, hi, band = [], [], [], [], []
+    nedge = nband = 0
     for i, (pid, wkb) in enumerate(polys_rows):
         g = gc.from_wkb(wkb)
-        for cid in cover_geometry(g, grid, level):
-            cell_map[int(cid)].append(i)
+        pp = gpred.PreparedPolygon(g)
+        cid = cover_geometry(g, grid, level)
+        clo = np.zeros(len(cid), dtype=np.int64)
+        chi = np.zeros(len(cid), dtype=np.int64)
+        if len(cid) and len(pp.x1):
+            coords = np.abs(np.r_[pp.x1, pp.y1])
+            margin = _BAND_ULPS * np.spacing(max(gmax, coords[np.isfinite(coords)].max(initial=0.0)))
+            maxx = np.maximum(pp.x1, pp.x2)
+            order = np.argsort(-maxx, kind="stable")
+            maxx = maxx[order]
+            miny = np.minimum(pp.y1, pp.y2)[order]
+            maxy = np.maximum(pp.y1, pp.y2)[order]
+            _, ix, iy = unpack(cid)
+            xmin = np.where(ix == 0, -np.inf, grid.x0 + ix * cs - margin)
+            for r in np.unique(iy):
+                ylo = -np.inf if r == 0 else grid.y0 + r * cs - margin
+                yhi = np.inf if r == nside - 1 else grid.y0 + (r + 1) * cs + margin
+                sel = np.flatnonzero((maxy >= ylo) & (miny <= yhi))
+                row = iy == r
+                clo[row] = nband
+                chi[row] = nband + np.searchsorted(-maxx[sel], -xmin[row], "right")
+                band.append(nedge + order[sel])
+                nband += len(sel)
         pids.append(pid)
         wkbs.append(wkb)
         envs.append(g.envelope() or (np.inf, np.inf, -np.inf, -np.inf))
-    sorted_cells = sorted(cell_map)
-    counts = np.asarray([len(cell_map[c]) for c in sorted_cells], dtype=np.int64)
+        preps.append(pp)
+        cells.append(cid)
+        owners.append(np.full(len(cid), i, dtype=np.int32))
+        lo.append(clo)
+        hi.append(chi)
+        nedge += len(pp.x1)
+
+    def cat(parts, dtype):
+        return np.concatenate([np.empty(0, dtype=dtype), *parts]).astype(dtype)
+
+    cells, owners = cat(cells, np.int64), cat(owners, np.int32)
+    order = np.lexsort((owners, cells))
+    keys, counts = np.unique(cells[order], return_counts=True)
     return {
         "pids": np.asarray(pids),
         "wkbs": wkbs,
         "envs": np.asarray(envs, dtype=np.float64).reshape(-1, 4),
-        "cell_keys": np.asarray(sorted_cells, dtype=np.int64),
+        "cell_keys": keys,
         "starts": np.concatenate([[0], np.cumsum(counts)]),
-        "members": (
-            np.concatenate([np.asarray(cell_map[c], dtype=np.int32) for c in sorted_cells])
-            if sorted_cells
-            else np.empty(0, dtype=np.int32)
-        ),
+        "members": owners[order],
         "level": level,
+        "ex1": cat([pp.x1 for pp in preps], np.float64),
+        "ey1": cat([pp.y1 for pp in preps], np.float64),
+        "ex2": cat([pp.x2 for pp in preps], np.float64),
+        "ey2": cat([pp.y2 for pp in preps], np.float64),
+        "ebox": np.asarray([pp.bbox for pp in preps], dtype=np.float64).reshape(-1, 4),
+        "band": cat(band, np.int32),
+        "band_lo": cat(lo, np.int64)[order],
+        "band_hi": cat(hi, np.int64)[order],
     }
 
 
@@ -300,7 +360,6 @@ def pip_join(
     tile_level: Optional[int] = None,
     tile_grid: Optional[CellGrid] = None,
     broadcast_threshold: int = BROADCAST_MAX_BYTES,
-    bbox_prefilter: bool = False,
 ) -> DataFrame:
     """Point-in-polygon (or other predicate) join.
 
@@ -335,43 +394,15 @@ def pip_join(
         # is honored; explicit False keeps the cell-join
         broadcast = dim.build_bytes <= broadcast_threshold
 
-    # bbox_prefilter: carry the build bbox (FLATTENED doubles — a
-    # struct column through the broadcast join measured +0.7s/256M
-    # probe rows just for field access) and discard out-of-envelope
-    # candidates in the JVM before they cross the python socket.
-    # MEASURED (round 5, 256M uniform points × 2000 districts,
-    # 32 pinned cores): removes ~20% of candidates but costs ~1s of
-    # join-side evaluation — net NEGATIVE when candidates are sparse
-    # (2M of 256M rows; the probe scan, not the socket, dominates).
-    # Net positive only when the candidate fraction is high, so it is
-    # opt-in rather than default.
-    if dim.small and not bbox_prefilter:
+    if dim.small:
         # the cached driver-side cover (same cover_geometry cells as
         # the cover_cells UDF) — no python stage on the build side
         build = dim.build_frame(polys, level, with_wkb=not broadcast)
-    elif not bbox_prefilter:
+    else:
         build = polys.select(
             F.col(poly_id).alias("__pid"),
             F.col(poly_geom).alias("__pwkb"),
             F.explode(cover_cells(level, grid)(F.col(poly_geom))).alias("__cell"),
-        )
-    else:
-        from ..functions import st_envelope
-
-        build = (
-            polys.select(
-                F.col(poly_id).alias("__pid"),
-                F.col(poly_geom).alias("__pwkb"),
-                st_envelope(F.col(poly_geom)).alias("__benv"),
-                F.explode(cover_cells(level, grid)(F.col(poly_geom))).alias("__cell"),
-            )
-            .select(
-                "__pid", "__pwkb", "__cell",
-                F.col("__benv.xmin").alias("__bx0"),
-                F.col("__benv.ymin").alias("__by0"),
-                F.col("__benv.xmax").alias("__bx1"),
-                F.col("__benv.ymax").alias("__by1"),
-            )
         )
     poly_bc = None
     if broadcast:
@@ -419,20 +450,7 @@ def pip_join(
     if broadcast is True:
         build = F.broadcast(build)
     cand = probe.join(build, on=on, how="inner")
-    if bbox_prefilter:
-        # inclusive bounds: every supported point predicate requires
-        # the point inside or ON the envelope, so touches/boundary
-        # cases survive.  The filter fuses into the join's codegen
-        # stage; the bbox columns are dropped before the python
-        # refine, so the socket sees only surviving, narrow rows.
-        cand = cand.where(
-            (F.col("__x") >= F.col("__bx0"))
-            & (F.col("__x") <= F.col("__bx1"))
-            & (F.col("__y") >= F.col("__by0"))
-            & (F.col("__y") <= F.col("__by1"))
-        ).drop("__bx0", "__by0", "__bx1", "__by1")
 
-    pred = predicate
     out_fields = [
         StructField("point_id", cand.schema["__qid"].dataType),
         StructField("poly_id", cand.schema["__pid"].dataType),
@@ -444,44 +462,46 @@ def pip_join(
         tgrid = tile_grid or grid
     out_schema = StructType(out_fields)
 
+    if predicate in ("intersects", "covers"):
+        wanted = (gpred.BOUNDARY, gpred.INTERIOR)
+    elif predicate == "contains":
+        wanted = (gpred.INTERIOR,)
+    elif predicate == "touches":
+        wanted = (gpred.BOUNDARY,)
+    else:
+        raise ValueError(f"unsupported point predicate {predicate}")
+
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         wkb_of = None
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            # sort by polygon id → contiguous slices, one vectorized
-            # point-location call per polygon (no pandas groupby)
+            # one point-location call per batch: the batch's distinct
+            # polygons' edges concatenated, candidate i reading slot[i]'s
             pid = pdf["__pid"].to_numpy()
-            order = np.argsort(pid, kind="stable")
-            pid = pid[order]
-            px = pdf["__x"].to_numpy(np.float64)[order]
-            py = pdf["__y"].to_numpy(np.float64)[order]
-            qid = pdf["__qid"].to_numpy()[order]
+            px = pdf["__x"].to_numpy(np.float64)
+            py = pdf["__y"].to_numpy(np.float64)
+            upid, first, slot = np.unique(pid, return_index=True, return_inverse=True)
             if poly_bc is not None:
                 if wkb_of is None:
                     v = poly_bc.value
                     wkb_of = dict(zip(v["pids"], v["wkbs"]))
+                wkbs = [wkb_of[p] for p in upid]
             else:
-                wkb_col = pdf["__pwkb"].to_numpy()[order]
-            bounds = np.flatnonzero(np.r_[True, pid[1:] != pid[:-1], True])
-            keep = np.zeros(n, dtype=bool)
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                w = wkb_of[pid[s]] if poly_bc is not None else wkb_col[s]
-                pp = _prepared(("pip", pid[s]), w)
-                loc = pp.locate_batch(px[s:e], py[s:e])
-                if pred in ("intersects", "covers"):
-                    keep[s:e] = loc != gpred.EXTERIOR
-                elif pred == "contains":
-                    keep[s:e] = loc == gpred.INTERIOR
-                elif pred == "touches":
-                    keep[s:e] = loc == gpred.BOUNDARY
-                else:
-                    raise ValueError(f"unsupported point predicate {pred}")
+                wkbs = pdf["__pwkb"].to_numpy()[first]
+            pps = [_prepared(("pip", p), w) for p, w in zip(upid, wkbs)]
+            eoff = np.cumsum([0] + [len(pp.x1) for pp in pps])
+            loc = gpred.locate_pairs(
+                px, py, np.asarray([pp.bbox for pp in pps], dtype=np.float64)[slot],
+                eoff[:-1][slot], eoff[1:][slot],
+                *(np.concatenate([np.empty(0)] + [getattr(pp, a) for pp in pps])
+                  for a in ("x1", "y1", "x2", "y2")),
+            )
+            keep = np.isin(loc, wanted)
             if keep.any():
-                out = {"point_id": qid[keep], "poly_id": pid[keep]}
+                out = {"point_id": pdf["__qid"].to_numpy()[keep], "poly_id": pid[keep]}
                 for c in keep_cols:
-                    out[c] = pdf[c].to_numpy()[order][keep]
+                    out[c] = pdf[c].to_numpy()[keep]
                 if tile_level is not None:
                     out["cell_id"] = tgrid.encode_points(px[keep], py[keep], tile_level)
                 yield pd.DataFrame(out)

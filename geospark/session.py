@@ -30,7 +30,7 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # measured sweep at 32-way (tools/profile_flagship.py, 16M pages):
+        # measured sweep at 32-way (round-6 flagship profile, 16M pages):
         # 16384→1.18M, 65536→1.94M, 262144→2.43M, 524288→2.26M pages/s —
         # one Arrow batch per ~128k-row task partition minimizes the
         # per-batch JVM↔python round-trip overhead that capped scaling

@@ -40,68 +40,6 @@ def test_fused_matches_composable(spark):
     assert lean.count() == len(fused)
 
 
-def test_geocode_pip_tile_sql_matches_kernel(spark):
-    """The fully-JVM Catalyst plan (broadcast candidate join + HOF
-    ray-crossing PIP) emits the identical row set to the mapInPandas
-    kernel plan."""
-    from geospark.io.pages import generate_districts, generate_pages
-    from geospark.ops.flagship import geocode_pip_tile_jvm, geocode_pip_tile_sql
-
-    pages = generate_pages(spark, 20000)
-    districts = generate_districts(spark, 200)
-    a = geocode_pip_tile_jvm(pages, districts, tile_level=14).toPandas()
-    b = geocode_pip_tile_sql(pages, districts, tile_level=14).toPandas()
-    cols = ["page_id", "poly_id", "cell_id"]
-    sa = sorted(map(tuple, a[cols].values.tolist()))
-    sb = sorted(map(tuple, b[cols].values.tolist()))
-    assert len(sa) > 0 and sa == sb
-
-
-def test_geocode_pip_tile_hybrid_matches_kernel(spark):
-    """The inner-box hybrid plan (JVM fast path + python ring refine)
-    emits the identical row set to the mapInPandas kernel plan."""
-    from geospark.io.pages import generate_districts, generate_pages
-    from geospark.ops.flagship import geocode_pip_tile_hybrid, geocode_pip_tile_jvm
-
-    pages = generate_pages(spark, 20000)
-    districts = generate_districts(spark, 200)
-    a = geocode_pip_tile_jvm(pages, districts, tile_level=14).toPandas()
-    b = geocode_pip_tile_hybrid(pages, districts, tile_level=14).toPandas()
-    cols = ["page_id", "poly_id", "cell_id"]
-    sa = sorted(map(tuple, a[cols].values.tolist()))
-    sb = sorted(map(tuple, b[cols].values.tolist()))
-    assert len(sa) > 0 and sa == sb
-
-
-def test_inner_box_is_interior(spark):
-    """_inner_box returns a box whose corners and midpoints are
-    strictly interior for every district shape."""
-    import numpy as np
-
-    from geospark.geom import core as gc
-    from geospark.geom import predicates as gpred
-    from geospark.io.pages import generate_districts
-    from geospark.ops.flagship import _inner_box
-
-    rows = generate_districts(spark, 60).select("poly_id", "geom").collect()
-    n_nonempty = 0
-    for r in rows:
-        pp = gpred.PreparedPolygon(gc.from_wkb(bytes(r[1])))
-        x0, y0, x1, y1 = _inner_box(pp)
-        if x0 > x1:
-            continue
-        n_nonempty += 1
-        cx, cy = (x0 + x1) / 2, (y0 + y1) / 2
-        px = np.array([x0, x1, x1, x0, cx, x0, x1, cx, cx]) 
-        py = np.array([y0, y0, y1, y1, cy, cy, cy, y0, y1])
-        # strictly interior points only (open box): nudge corners in
-        eps = 1e-9 * max(x1 - x0, y1 - y0)
-        px = np.clip(px, x0 + eps, x1 - eps)
-        py = np.clip(py, y0 + eps, y1 - eps)
-        assert (pp.locate_batch(px, py) == gpred.INTERIOR).all()
-    assert n_nonempty >= 40  # most district shapes admit an inner box
-
-
 def test_result_outlives_dimension_dataframe(spark):
     """A flagship result DataFrame closes over the cached broadcast
     index; collecting the dimension DataFrame (weak-key eviction +
@@ -110,11 +48,11 @@ def test_result_outlives_dimension_dataframe(spark):
     import gc as _gc
 
     from geospark.io.pages import generate_districts, generate_pages
-    from geospark.ops.flagship import geocode_pip_tile_jvm
+    from geospark.ops.flagship import geocode_pip_tile
 
     pages = generate_pages(spark, 2000)
     districts = generate_districts(spark, 20)
-    out = geocode_pip_tile_jvm(pages, districts, tile_level=10, include_url=False)
+    out = geocode_pip_tile(pages, districts, tile_level=10, include_url=False)
     n1 = out.count()
     del districts
     _gc.collect()

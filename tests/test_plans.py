@@ -24,17 +24,17 @@ def optimized_of(df) -> str:
 
 def test_flagship_plan_has_no_shuffle(spark):
     from geospark.io.pages import generate_districts, generate_pages
-    from geospark.ops.flagship import geocode_pip_tile_jvm
+    from geospark.ops.flagship import geocode_pip_tile
 
     pages = generate_pages(spark, 1000)
     districts = generate_districts(spark, 50)
-    out = geocode_pip_tile_jvm(pages, districts, tile_level=14)
+    out = geocode_pip_tile(pages, districts, tile_level=14)
     p = plan_of(out)
     assert "Exchange" not in p, p
-    assert "MapInPandas" in p
-    # exactly ONE python stage (fused geocode+cells+PIP+tile refine);
-    # the pages generator itself is a second MapInPandas upstream
-    assert p.count("MapInPandas") <= 2
+    # exactly ONE python stage (fused cells+PIP+tile kernel over the
+    # JVM-extracted points); the pages generator is a MapInPandas
+    # upstream
+    assert p.count("MapInArrow") == 1, p
 
 
 def test_parquet_scan_pushdown_and_pruning(spark, sf_dir_001):

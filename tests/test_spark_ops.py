@@ -77,34 +77,6 @@ def test_pip_join_salted_same_result(spark):
     )
 
 
-def test_pip_join_bbox_prefilter_same_result(spark):
-    """Opt-in JVM bbox prefilter (round-5 A/B: measured net-negative
-    on both sparse and dense candidate mixes, kept as an option —
-    BENCH/round5_pip_join_decomposition.json) must not change the
-    result set, including boundary/touches hits on the envelope."""
-    from geospark.ops.joins import pip_join
-
-    rng = np.random.RandomState(11)
-    n = 800
-    xs = np.concatenate([rng.uniform(-5, 25, n - 4), [0.0, 10.0, 0.0, 10.0]])
-    ys = np.concatenate([rng.uniform(-5, 25, n - 4), [0.0, 10.0, 5.0, 5.0]])
-    pts = pd.DataFrame({"point_id": np.arange(n), "x": xs, "y": ys})
-    polys = pd.DataFrame(
-        {"poly_id": [0, 1], "geom": [C.to_wkb(C.from_wkt(SQ1)), C.to_wkb(C.from_wkt(SQ2))]}
-    )
-    for pred in ("intersects", "touches", "contains"):
-        plain = pip_join(
-            spark.createDataFrame(pts), spark.createDataFrame(polys), predicate=pred
-        ).toPandas()
-        filt = pip_join(
-            spark.createDataFrame(pts), spark.createDataFrame(polys),
-            predicate=pred, bbox_prefilter=True,
-        ).toPandas()
-        assert set(zip(plain["point_id"], plain["poly_id"])) == set(
-            zip(filt["point_id"], filt["poly_id"])
-        )
-
-
 def test_predicate_join_modes(spark, squares_df):
     from geospark.ops.joins import predicate_join
 
@@ -372,9 +344,11 @@ def test_predicate_join_broadcast_matches_shuffle(spark):
 
 
 def test_pip_join_size_gate_falls_back_to_shuffle(spark):
-    """A build side over the broadcast threshold must take the shuffle
-    path (no unbounded driver collect) with identical output — even
-    when broadcast=True was requested."""
+    """Only the default broadcast=None is size-gated: over the threshold
+    it takes the cell-join plan whose candidate rows carry each
+    polygon's WKB (no broadcast polygon map, no unbounded driver
+    collect).  An explicit broadcast=True is the caller's call and is
+    honoured.  Both plans give the same output."""
     from geospark.ops.joins import estimate_build_bytes, pip_join
 
     rng = np.random.RandomState(29)
@@ -394,22 +368,26 @@ def test_pip_join_size_gate_falls_back_to_shuffle(spark):
     spolys = spark.createDataFrame(polys)
     est = estimate_build_bytes(spolys, "geom")
     assert est > 0
-    gated = pip_join(
-        spark.createDataFrame(pts), spolys, broadcast=True, broadcast_threshold=1
-    ).toPandas()
-    ref = pip_join(
-        spark.createDataFrame(pts), spolys, broadcast=False
-    ).toPandas()
-    assert set(zip(gated["point_id"], gated["poly_id"])) == set(
-        zip(ref["point_id"], ref["poly_id"])
-    )
+
+    def run(**kw):
+        df = pip_join(spark.createDataFrame(pts), spolys, broadcast_threshold=1, **kw)
+        return df._jdf.queryExecution().analyzed().toString(), df.toPandas()
+
+    gated_plan, gated = run()
+    forced_plan, forced = run(broadcast=True)
+    # the chosen plan: the gated default's build side carries the WKB,
+    # the honoured broadcast=True's build side does not
+    assert "__pwkb" in gated_plan, gated_plan
+    assert "__pwkb" not in forced_plan, forced_plan
+    key = lambda d: set(zip(d["point_id"], d["poly_id"]))
+    assert key(gated) == key(forced)
     assert len(gated) > 0
 
 
 def test_flagship_size_gate_parity(spark):
-    """geocode_pip_tile_jvm above the gate decomposes into the shuffle
+    """geocode_pip_tile above the gate decomposes into the shuffle
     cell-join; output must match the broadcast fused plan exactly."""
-    from geospark.ops.flagship import geocode_pip_tile_jvm
+    from geospark.ops.flagship import geocode_pip_tile
 
     n = 300
     pages = spark.range(n).select(
@@ -435,13 +413,13 @@ def test_flagship_size_gate_parity(spark):
             }
         )
     )
-    fused = geocode_pip_tile_jvm(pages, polys, tile_level=14).toPandas()
+    fused = geocode_pip_tile(pages, polys, tile_level=14).toPandas()
     import geospark.ops.joins as J
 
     saved = J.BROADCAST_MAX_BYTES
     try:
         J.BROADCAST_MAX_BYTES = 1
-        gated = geocode_pip_tile_jvm(pages, polys, tile_level=14).toPandas()
+        gated = geocode_pip_tile(pages, polys, tile_level=14).toPandas()
     finally:
         J.BROADCAST_MAX_BYTES = saved
     key = lambda d: set(zip(d["page_id"], d["poly_id"], d["cell_id"]))

@@ -27,15 +27,15 @@ def main(sf_dir="/root/testdata/sf0.01"):
 
     # flagship
     from geospark.io.pages import generate_districts, generate_pages
-    from geospark.ops.flagship import geocode_pip_tile_jvm
+    from geospark.ops.flagship import geocode_pip_tile
 
     pages = generate_pages(spark, 1000)
     districts = generate_districts(spark, 50)
-    flag = geocode_pip_tile_jvm(pages, districts, tile_level=14)
+    flag = geocode_pip_tile(pages, districts, tile_level=14)
     buf = io.StringIO()
     with redirect_stdout(buf):
         flag.explain("formatted")
-    out.append("## flagship geocode_pip_tile_jvm\n```\n" + buf.getvalue() + "```\n")
+    out.append("## flagship geocode_pip_tile\n```\n" + buf.getvalue() + "```\n")
 
     for name in [
         "pip_join", "knn", "knn_geom", "tile_assign", "grid", "dedup_exact",
