@@ -1,12 +1,15 @@
 """Polygon → covering cell set.
 
-Exact cover at a level: a cell overlaps the polygon iff
+Cover at a level: a candidate cell of the bbox cover is kept iff
   (a) a cell corner is inside/on the polygon, or
-  (b) a polygon vertex is inside the cell, or
-  (c) a polygon edge intersects the cell rectangle.
-All three tests are vectorized over the bbox-candidate cell set.
-Optionally compacted (4 siblings → parent) to keep the build-side
-small for broadcast joins.
+  (b) a polygon vertex is encoded into the cell, or
+  (c) a polygon edge intersects the cell rectangle, widened by
+      ulp_margin and open on the grid's border rows and columns.
+All three tests are vectorized over the bbox-candidate cell set.  The
+widening makes the cover conservative against the cell encoder: every
+point inside or on the polygon encodes (CellGrid.cell_xy, which rounds
+and clamps) to a cell of its cover.  Optionally compacted (4 siblings
+→ parent) to keep the build-side small for broadcast joins.
 """
 
 from __future__ import annotations
@@ -16,6 +19,23 @@ import numpy as np
 from ..geom.core import Geometry
 from ..geom.predicates import PreparedPolygon
 from .cellid import CellGrid, compact as compact_cells, unpack
+
+# Cell bounds are widened by this many ulps of the largest coordinate
+# in play (the grid's corners and the polygon's vertices).  That covers
+# the float rounding of the cell encode, which can put a point a few
+# ulps outside its cell's exact bounds, and of the crossing test's
+# x-intercept, which can land a few ulps right of its edge's max x.  A
+# wider margin only adds cells and edges; a narrower one can drop a
+# deciding one.
+_BAND_ULPS = 64
+
+
+def ulp_margin(grid: CellGrid, coords) -> float:
+    """_BAND_ULPS ulps of the largest finite |coordinate| among the
+    grid's corners and `coords`."""
+    gmax = max(abs(grid.x0), abs(grid.y0), abs(grid.x0 + grid.span), abs(grid.y0 + grid.span))
+    c = np.abs(np.asarray(coords, dtype=np.float64)).ravel()
+    return _BAND_ULPS * float(np.spacing(max(gmax, c[np.isfinite(c)].max(initial=0.0))))
 
 
 def cover_geometry(
@@ -62,19 +82,23 @@ def _overlap_mask(g: Geometry, grid: CellGrid, cand: np.ndarray, level: int) -> 
             loc = pp.covers_batch(cxmin[m] + dx, cymin[m] + dy)
             keep[np.nonzero(m)[0][loc]] = True
 
-    # (b) any polygon vertex inside a cell — bucket vertices to cells
-    if not keep.all():
-        c = g.all_coords()
-        if len(c):
-            vix = np.floor((c[:, 0] - grid.x0) / s).astype(np.int64)
-            viy = np.floor((c[:, 1] - grid.y0) / s).astype(np.int64)
-            vkey = vix * (1 << 32) + viy
-            ckey = ix * (1 << 32) + iy
-            keep |= np.isin(ckey, vkey)
+    # (b) any polygon vertex in a cell — bucket vertices with the
+    # encoder itself, so rounding and clamping agree with the probes
+    c = g.all_coords()
+    if not keep.all() and len(c):
+        vix, viy = grid.cell_xy(c[:, 0], c[:, 1], level)
+        keep |= np.isin(ix * (1 << 32) + iy, vix * (1 << 32) + viy)
 
-    # (c) polygon edge × cell rectangle intersection (slab test)
+    # (c) polygon edge × widened cell rectangle (slab test)
     todo = np.nonzero(~keep)[0]
     if len(todo):
+        margin = ulp_margin(grid, c)
+        last = (1 << level) - 1
+        ix, iy = ix[todo], iy[todo]
+        rxmin = np.where(ix == 0, -np.inf, cxmin[todo] - margin)
+        rymin = np.where(iy == 0, -np.inf, cymin[todo] - margin)
+        rxmax = np.where(ix == last, np.inf, cxmax[todo] + margin)
+        rymax = np.where(iy == last, np.inf, cymax[todo] + margin)
         edges = []
         for arr in g.coords_iter():
             if len(arr) >= 2:
@@ -82,9 +106,7 @@ def _overlap_mask(g: Geometry, grid: CellGrid, cand: np.ndarray, level: int) -> 
         if edges:
             p = np.concatenate([e[0] for e in edges])
             q = np.concatenate([e[1] for e in edges])
-            hit = _seg_rect_any(
-                p, q, cxmin[todo], cymin[todo], cxmax[todo], cymax[todo]
-            )
+            hit = _seg_rect_any(p, q, rxmin, rymin, rxmax, rymax)
             keep[todo[hit]] = True
     return keep
 

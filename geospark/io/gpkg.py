@@ -8,38 +8,36 @@ geometry-column introspection, drop-table.
 
 Spark mapping: the GeoPackage file is a *boundary* format — read
 lands in a DataFrame (geometry re-encoded as plain WKB + srid), write
-streams `toLocalIterator()` through batched INSERTs (reference batch
-size 4000, gpkg.clj:1074).  SQLite is single-writer, so the sink is a
-driver-side stream; engine-internal storage stays parquet/snapshot
-tables (SURVEY.md §2.A).
+encodes rows on executors and inserts them from the driver (SQLite is
+single-writer).  One decode per direction: the read's _range_pdf and
+the write's _convert_batch run in executor tasks when those share the
+driver's filesystem (_shares_driver_fs).  Otherwise the driver runs
+the read's decode itself, and the write's encoded rows stream to the
+driver through `toLocalIterator()` (reference batch size 4000,
+gpkg.clj:1074).
+Engine-internal storage stays parquet/snapshot tables (SURVEY.md
+§2.A).
 """
 
 from __future__ import annotations
 
-import datetime as _dt
+import contextlib
 import math
 import os
+import shutil
 import sqlite3
-from typing import Dict, Iterable, List, Optional, Tuple
+import tempfile
+from typing import Dict, List, NamedTuple, Optional, Tuple
 
 import numpy as np
 import pandas as pd
 
 from ..geom import core as gc
 from . import gpb
+from .gpkg_validate import _GEOM_TYPE_NAMES as _GEOMETRY_DECLS
 
 APPLICATION_ID = 0x47504B47  # "GPKG"
 USER_VERSION = 10300
-
-_GEOM_TYPE_NAMES = {
-    gc.POINT: "POINT",
-    gc.LINESTRING: "LINESTRING",
-    gc.POLYGON: "POLYGON",
-    gc.MULTIPOINT: "MULTIPOINT",
-    gc.MULTILINESTRING: "MULTILINESTRING",
-    gc.MULTIPOLYGON: "MULTIPOLYGON",
-    gc.GEOMETRYCOLLECTION: "GEOMETRYCOLLECTION",
-}
 
 WGS84_DEF = (
     'GEOGCS["WGS 84",DATUM["WGS_1984",SPHEROID["WGS 84",6378137,298.257223563]],'
@@ -161,20 +159,31 @@ def column_names(path: str, table: str) -> List[str]:
         con.close()
 
 
-def _spark_type_for_decl(decl: str):
-    """SQLite declared type → Spark type, following sqlite3's type
-    affinity rules (sqlite.org/datatype3.html §3.1) restricted to the
-    types a GeoPackage may declare.  Returns None for declarations we
-    cannot map deterministically (caller falls back to the driver-side
-    inferred read for that table).
+def _spark_type_for_decl(decl: str) -> str:
+    """SQLite declared type → Spark type.  Total: every declaration
+    maps, by sqlite3's type affinity rules (sqlite.org/datatype3.html
+    §3.1) tested in this order:
 
-    BOOLEAN maps to long, DATE/TIME to string — matching what the
-    python sqlite3 driver actually returns for those storage classes
-    (ints / ISO strings) and therefore what the original inferred-
-    schema path produced."""
+      BOOLEAN                              → bigint (sqlite3 returns 0/1)
+      a GeoPackage geometry type name (GEOMETRY, POINT, …,
+        GEOMETRYCOLLECTION and the non-linear extension's CURVE, …)
+                                           → binary (the GP blob);
+        tested before the INT rule, since POINT contains "INT"
+      DATE…, …TIME…                         → string (ISO text)
+      …INT…                                → bigint
+      …CHAR…, …CLOB…, …TEXT…               → string
+      …BLOB…, or no declared type          → binary
+      anything else: REAL, FLOAT, DOUBLE and the other NUMERIC-affinity
+        declarations (NUMERIC, DECIMAL(10,2), …) → double
+
+    A value whose storage class differs from its column's mapped type
+    is converted when the conversion is exact and refused otherwise
+    (_coerce_storage_classes)."""
     d = (decl or "").strip().upper()
     if d == "BOOLEAN":
         return "bigint"
+    if d in _GEOMETRY_DECLS:
+        return "binary"
     if d.startswith("DATE") or "TIME" in d:
         return "string"
     if "INT" in d:
@@ -183,55 +192,72 @@ def _spark_type_for_decl(decl: str):
         return "string"
     if "BLOB" in d or d == "":
         return "binary"
-    if any(k in d for k in ("REAL", "FLOA", "DOUB")):
-        return "double"
-    return None
+    return "double"
 
 
-def _table_plan(path: str, table: str, to_srid, columns, rowids):
-    """Driver-side metadata pass: final Spark schema (DDL list) for a
-    table plus the geometry column name/srid.  Returns None if any
-    column's declared type is ambiguous (→ driver-side fallback)."""
+class _ScanPlan(NamedTuple):
+    """Everything one decode of a table's rowid range needs."""
+
+    table: str
+    fields: List[Tuple[str, str]]  # (output name, Spark type), in order
+    src_cols: List[str]  # the SQLite select list
+    gcol: Optional[Tuple[str, str, int]]  # geometry_column(), or None
+    to_srid: Optional[int]
+    rowids: bool
+    bbox: Optional[Tuple[float, float, float, float]]
+    rtree: Optional[str]  # the rtree index that drives a bbox read
+
+    def schema(self) -> str:
+        return ", ".join(f"`{n}` {t}" for n, t in self.fields)
+
+
+def _table_plan(path: str, table: str, to_srid, columns, rowids, bbox=None) -> _ScanPlan:
+    """Driver-side metadata pass over one table: the read's Spark
+    schema, the columns to select and the geometry column.
+
+    Output columns: rowid (rowids=True), the table's columns in order
+    with `fid` left out and the geometry column renamed `geom`, srid
+    (spatial tables), table.  A source column named like a synthesized
+    column (srid and geom on a spatial table, rowid with rowids=True,
+    table always; compared case-insensitively, as Spark resolves
+    names) is not selected, so the synthesized column wins.  Column
+    types follow _spark_type_for_decl."""
+    gcol = geometry_column(path, table)
+    gname = gcol[0] if gcol else None
+    if bbox is not None and gcol is None:
+        raise ValueError(f"bbox read requested but table {table!r} has no geometry column")
+    rtree = f"rtree_{table}_{gname}" if bbox is not None else None
     con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
     try:
         info = con.execute(f'PRAGMA table_info("{table}")').fetchall()
+        if rtree is not None and not _has_table(con, rtree):
+            rtree = None
     finally:
         con.close()
-    gcol = geometry_column(path, table)
-    gname = gcol[0] if gcol else None
-    # the distributed plan SYNTHESIZES columns named srid/table (and
-    # renames the geometry column to geom, and rowid when rowids=True);
-    # a source table with a real column of one of those names would
-    # collide in the mapInPandas schema — fall back to the driver-side
-    # read, which resolves the collision by deterministic overwrite
-    src_names = {r[1] for r in info if r[1] != "fid" and r[1] != gname}
-    synthesized = {"srid", "table"} if gname is not None else {"table"}
+    synthesized = {"table"}
+    if gcol is not None:
+        synthesized |= {"srid", "geom"}
     if rowids:
         synthesized.add("rowid")
-    if gname is not None and gname != "geom":
-        synthesized.add("geom")
-    if src_names & synthesized:
-        return None
-    fields = []
-    if rowids:
-        fields.append(("rowid", "bigint"))
+    fields = [("rowid", "bigint")] if rowids else []
+    source = {}
     for _cid, name, decl, _nn, _dflt, _pk in info:
-        if name == "fid":
-            continue  # auto pk suppressed, like the reference
         if name == gname:
             fields.append(("geom", "binary"))
-            continue
-        t = _spark_type_for_decl(decl)
-        if t is None:
-            return None
-        fields.append((name, t))
-    if gname is not None:
+            source["geom"] = name
+        elif name != "fid" and name.lower() not in synthesized:
+            fields.append((name, _spark_type_for_decl(decl)))
+            source[name] = name
+    if gcol is not None:
         fields.append(("srid", "bigint"))
     if columns:
         keep = set(columns) | {"geom", "srid", "rowid"}
         fields = [f for f in fields if f[0] in keep]
     fields.append(("table", "string"))
-    return {"fields": fields, "gcol": gcol}
+    return _ScanPlan(
+        table, fields, [source[n] for n, _ in fields if n in source],
+        gcol, to_srid, rowids, bbox, rtree,
+    )
 
 
 def _rowid_ranges(path: str, table: str, rows_per_partition: int):
@@ -273,8 +299,8 @@ def _rowid_ranges(path: str, table: str, rows_per_partition: int):
 
 def _env_intersects(env, bbox) -> bool:
     """Envelope (xmin, ymin, xmax, ymax) intersects bbox — the ONE
-    bbox predicate shared by the indexed, unindexed, and driver read
-    paths (closed-interval: edge touches count)."""
+    bbox predicate of the indexed and unindexed reads (closed-interval:
+    edge touches count)."""
     return (
         env is not None
         and env[0] <= bbox[2]
@@ -284,55 +310,14 @@ def _env_intersects(env, bbox) -> bool:
     )
 
 
-def _pdf_spark_schema(pdf, path=None, table=None) -> str:
-    """Explicit DDL for an EMPTY driver-fallback result — Spark cannot
-    infer a schema from zero rows.  geom/srid/rowid/table are known;
-    attribute columns map from the table's PRAGMA-declared types (the
-    same mapping _table_plan uses) so an empty bbox window or empty
-    table yields the SAME column types as a non-empty read — a
-    multi-table unionByName must not coerce bigint/double columns to
-    string (advice r5, low).  Columns without a usable declared type
-    (expression columns, foreign GPKGs) keep the pandas-dtype map."""
-    decl_types = {}
-    if path is not None and table is not None:
-        try:
-            con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-            try:
-                for _cid, name, decl, _nn, _dflt, _pk in con.execute(
-                    f'PRAGMA table_info("{table}")'
-                ):
-                    t = _spark_type_for_decl(decl)
-                    if t is not None:
-                        decl_types[name] = t
-            finally:
-                con.close()
-        except sqlite3.Error:
-            pass
-    parts = []
-    for n in pdf.columns:
-        if n == "geom":
-            t = "binary"
-        elif n in ("srid", "rowid"):
-            t = "bigint"
-        elif n == "table":
-            t = "string"
-        elif n in decl_types:
-            t = decl_types[n]
-        else:
-            t = {"i": "bigint", "u": "bigint", "f": "double", "b": "boolean",
-                 "M": "timestamp"}.get(pdf[n].dtype.kind, "string")
-        parts.append(f"`{n}` {t}")
-    return ", ".join(parts)
-
-
 def _coerce_storage_classes(pdf, fields, table):
     """SQLite permits values whose storage class differs from the
     column's declared affinity (a REAL or TEXT value in an
     INTEGER-declared column); with Arrow's safecheck off (the Spark
     default) a non-integral float would silently TRUNCATE to bigint.
-    Lossless coercions are applied in place; lossy ones raise with
-    the row context (read the table via the driver path — e.g.
-    read_gpkg(distributed=False) — to use inferred schema instead)."""
+    Exact conversions are applied in place: an integral REAL to
+    bigint, an INTEGER of magnitude at most 2^53 to double.  Anything
+    else raises with the table and column."""
     from .gpb import GpbError
 
     for name, t in fields:
@@ -353,11 +338,11 @@ def _coerce_storage_classes(pdf, fields, table):
                         return int(v)
                     raise GpbError(
                         f"GPKG {table}.{name}: non-integral REAL value {v!r} in an "
-                        "INTEGER-declared column; read with distributed=False"
+                        "INTEGER-declared column"
                     )
                 raise GpbError(
                     f"GPKG {table}.{name}: {type(v).__name__} value in an "
-                    "INTEGER-declared column; read with distributed=False"
+                    "INTEGER-declared column"
                 )
 
             # explicit object dtype: Series.map would re-infer an
@@ -374,10 +359,15 @@ def _coerce_storage_classes(pdf, fields, table):
                 if v is None or isinstance(v, float):
                     return v
                 if isinstance(v, int):
-                    return float(v)
+                    if abs(v) <= 2**53:
+                        return float(v)
+                    raise GpbError(
+                        f"GPKG {table}.{name}: integer {v} in a REAL- or NUMERIC-declared "
+                        "column has no exact double"
+                    )
                 raise GpbError(
                     f"GPKG {table}.{name}: {type(v).__name__} value in a "
-                    "REAL-declared column; read with distributed=False"
+                    "REAL- or NUMERIC-declared column"
                 )
 
             pdf[name] = col.map(fix_float)
@@ -387,7 +377,7 @@ def _coerce_storage_classes(pdf, fields, table):
                 v = col[bad].iloc[0]
                 raise GpbError(
                     f"GPKG {table}.{name}: {type(v).__name__} value in a "
-                    "TEXT-declared column; read with distributed=False"
+                    "TEXT-declared column"
                 )
         elif t == "binary":
             bad = col.map(lambda v: v is not None and not isinstance(v, (bytes, bytearray, memoryview)))
@@ -395,44 +385,170 @@ def _coerce_storage_classes(pdf, fields, table):
                 v = col[bad].iloc[0]
                 raise GpbError(
                     f"GPKG {table}.{name}: {type(v).__name__} value in a "
-                    "BLOB-declared column; read with distributed=False"
+                    "BLOB- or geometry-declared column"
                 )
 
 
-def _read_table_distributed(
-    spark, path, table, to_srid, columns, rowids, plan, rows_per_partition, bbox=None
-):
-    """Rowid-range-partitioned scan: each task opens the SQLite file
+def _range_pdf(con, plan: _ScanPlan, lo: int, hi: int) -> pd.DataFrame:
+    """The one decode of read_gpkg: rows with rowid in [lo, hi] of
+    plan.table → a pandas frame with plan.fields' columns, geometry
+    re-encoded as plain WKB (reprojected when plan.to_srid asks).  A
+    scan task runs it on its own connection; a driver-side read runs
+    it over every range.
+
+    With plan.bbox, only rows whose geometry envelope intersects it
+    (in the FILE's native CRS).  With an rtree index (plan.rtree) the
+    candidates come from an index join inside the SQL, so
+    non-candidates are never fetched or decoded, followed by an exact
+    envelope refine (the rtree stores outward-rounded float32 bounds).
+    Without an index every row in the range decodes its envelope."""
+    table, gcol, bbox, rowids = plan.table, plan.gcol, plan.bbox, plan.rowids
+    # explicit alias: bare `SELECT rowid, ...` would NAME the rowid
+    # column after the integer pk it aliases (`fid`), colliding with
+    # the pk column read via the select list
+    if plan.rtree is not None:
+        # rtree candidate join: non-candidates never leave SQLite.
+        # CROSS JOIN pins the join ORDER — the rtree virtual table
+        # drives (its index takes the id-range + bbox constraints
+        # together), then each candidate makes ONE rowid probe into
+        # the base table.  The reversed order (base table driving)
+        # degenerates to a full rtree scan PER ROW of the range
+        # (EXPLAIN QUERY PLAN verified).
+        sel = ", ".join(f'"{table}"."{c}"' for c in plan.src_cols) or "NULL"
+        if rowids:
+            sel = f'"{table}".rowid AS "__gpkg_rowid", ' + sel
+        rows = con.execute(
+            f'SELECT {sel} FROM "{plan.rtree}" __rt '
+            f'CROSS JOIN "{table}" ON "{table}".rowid = __rt.id '
+            f"WHERE __rt.id >= ? AND __rt.id <= ? "
+            f"AND __rt.maxx >= ? AND __rt.minx <= ? "
+            f"AND __rt.maxy >= ? AND __rt.miny <= ?",
+            (lo, hi, bbox[0], bbox[2], bbox[1], bbox[3]),
+        )
+    else:
+        sel = ", ".join(f'"{c}"' for c in plan.src_cols) or "NULL"
+        if rowids:
+            sel = 'rowid AS "__gpkg_rowid", ' + sel
+        rows = con.execute(
+            f'SELECT {sel} FROM "{table}" WHERE rowid >= ? AND rowid <= ?', (lo, hi)
+        )
+    names = [d[0] for d in rows.description]
+    data = rows.fetchall()
+    # numeric columns holding another storage class are built with
+    # object dtype: the plain constructor promotes int64+NULL to
+    # float64 and an int beyond 2^53 to a rounded float BEFORE the
+    # storage-class coercion below could notice
+    numeric = {n: t for n, t in plan.fields if t in ("bigint", "double")}
+    if data:
+        arrays = list(zip(*data))
+
+        def col_for(i, nm):
+            vals = arrays[i]
+            t = numeric.get(nm)
+            if (t == "bigint" and any(v is None or type(v) is float for v in vals)) or (
+                t == "double" and any(type(v) is int for v in vals)
+            ):
+                return pd.Series(vals, dtype=object)
+            return pd.Series(vals)
+
+        pdf = pd.DataFrame({nm: col_for(i, nm) for i, nm in enumerate(names)})
+    else:
+        pdf = pd.DataFrame(columns=names)
+    if rowids:
+        pdf = pdf.rename(columns={"__gpkg_rowid": "rowid"})
+    if gcol is not None and gcol[0] in pdf.columns:
+        col, _tname, srid = gcol
+        to_srid = plan.to_srid
+        geoms = []
+        keep = [] if bbox is not None else None
+        if to_srid is None:
+            # no reprojection → the blob's payload IS the WKB the
+            # engine wants: strip the GP header instead of the
+            # decode→re-encode round trip (measured 10× on the
+            # per-task decode cost; the embedded WKB passes through
+            # verbatim, exactly what the writer stored).
+            # payload_offset validates magic/envelope/extended-bit so
+            # corrupt or ExtendedGeoPackageBinary blobs still fail AT
+            # THE SCAN with context, and the first payload byte is
+            # checked to be a WKB byte-order marker
+            from .gpb import GpbError, payload_offset
+
+            for b in pdf[col]:
+                if b is None:
+                    geoms.append(None)
+                    if keep is not None:
+                        keep.append(False)
+                    continue
+                b = bytes(b)
+                off = payload_offset(b)
+                if len(b) <= off or b[off] not in (0, 1):
+                    raise GpbError(
+                        f"GP blob payload is not WKB (first byte "
+                        f"{b[off:off + 1]!r})"
+                    )
+                payload = b[off:]
+                if keep is not None:
+                    # exact refine (the rtree candidates carry
+                    # outward-rounded float32 bounds)
+                    keep.append(_env_intersects(gc.from_wkb(payload).envelope(), bbox))
+                geoms.append(payload)
+        else:
+            for b in pdf[col]:
+                if b is None:
+                    geoms.append(None)
+                    if keep is not None:
+                        keep.append(False)
+                    continue
+                g, g_srid = gpb.decode(bytes(b))
+                if keep is not None:
+                    # bbox is in the FILE's native CRS: test the
+                    # envelope BEFORE reprojection, and skip the
+                    # transform for dropped rows
+                    hit = _env_intersects(g.envelope(), bbox)
+                    keep.append(hit)
+                    if not hit:
+                        geoms.append(None)
+                        continue
+                if g_srid != to_srid:
+                    from ..crs.osgb import reproject
+
+                    g = reproject(g, g_srid, to_srid)
+                geoms.append(gc.to_wkb(g))
+        pdf[col] = pd.Series(geoms, index=pdf.index, dtype=object)
+        pdf = pdf.rename(columns={col: "geom"})
+        pdf["srid"] = to_srid if to_srid is not None else srid
+        if keep is not None:
+            pdf = pdf.loc[np.asarray(keep, dtype=bool)]
+    pdf["table"] = table
+    _coerce_storage_classes(pdf, plan.fields, table)
+    return pdf.reindex(columns=[n for n, _ in plan.fields])
+
+
+def _scan_table(spark, path: str, plan: _ScanPlan, rows_per_partition: int, distributed: bool):
+    """One table → DataFrame with plan.schema(), by _range_pdf over
+    balanced rowid ranges.
+
+    distributed=True: one scan task per range; each opens the file
     read-only+immutable (the reference's concurrent-reader discipline,
-    gpkg.clj:144-147) and reads only its range — driver memory is
-    O(#ranges), never the table.
-
-    bbox = (xmin, ymin, xmax, ymax) in the FILE's native CRS
-    (engine-added; the reference's open has no windowed read): rows
-    whose geometry envelope intersects it.  With an rtree spatial
-    index present the candidate set comes from an index join INSIDE
-    each task's SQL — non-candidates are never fetched or decoded —
-    followed by an exact envelope refine (the rtree stores
-    outward-rounded float32 bounds).  Without an index every row in
-    the range decodes its envelope for the filter."""
-    from pyspark.sql import functions as F
-
-    fields = plan["fields"]
-    gcol = plan["gcol"]
-    schema_ddl = ", ".join(f"`{n}` {t}" for n, t in fields)
-    out_names = [n for n, _ in fields]
-    ranges = _rowid_ranges(path, table, rows_per_partition)
-    if not ranges:
-        return spark.createDataFrame([], schema_ddl)
-    rtree_for_bbox = None
-    if bbox is not None and gcol is not None:
-        rt = f"rtree_{table}_{gcol[0]}"
-        con0 = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
+    gpkg.clj:144-147), so driver memory is O(#ranges), never the
+    table.  distributed=False: executors cannot open `path`, so the
+    driver decodes every range itself and hands Spark the rows."""
+    schema = plan.schema()
+    ranges = _rowid_ranges(path, plan.table, rows_per_partition)
+    if not distributed:
+        con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
         try:
-            if _has_table(con0, rt):
-                rtree_for_bbox = rt
+            pdfs = [_range_pdf(con, plan, lo, hi) for lo, hi in ranges]
         finally:
-            con0.close()
+            con.close()
+        pdf = pd.concat(pdfs, ignore_index=True) if pdfs else None
+        if pdf is None or pdf.empty:
+            return spark.createDataFrame([], schema)
+        # NaN → None: a NULL stays NULL whether or not Spark converts
+        # the frame through Arrow (which does this itself)
+        return spark.createDataFrame(pdf.astype(object).where(pdf.notna(), None), schema)
+    if not ranges:
+        return spark.createDataFrame([], schema)
     # exactly ONE range per partition: repartition(n) hash-shuffles a
     # small local relation UNEVENLY (measured 5 ranges landing in one
     # partition → a 5× critical path); parallelize with n slices is
@@ -446,149 +562,23 @@ def _read_table_distributed(
         try:
             for pdf in batches:
                 for lo, hi in zip(pdf["lo"], pdf["hi"]):
-                    yield _range_pdf(con, int(lo), int(hi))
+                    yield _range_pdf(con, plan, int(lo), int(hi))
         finally:
             con.close()
 
-    # COLUMN PRUNING pushed into the SQLite select: read only the
-    # columns the final schema keeps (geom maps back to its source
-    # column; rowid/srid/table are synthesized).  A wide table with a
-    # narrow `columns=` projection never deserializes dropped blobs.
-    src_cols = []
-    for n in out_names:
-        # skip only the columns that are actually SYNTHESIZED for this
-        # table: srid is synthesized only for spatial tables — an
-        # attribute table keeps a real user column named srid
-        if n == "table" or (n == "rowid" and rowids) or (n == "srid" and gcol is not None):
-            continue
-        src_cols.append(gcol[0] if (n == "geom" and gcol is not None) else n)
-    sel_cols = ", ".join(f'"{c}"' for c in src_cols) if src_cols else "NULL"
+    return rng_df.mapInPandas(scan, schema=schema)
 
-    def _range_pdf(con, lo, hi):
-        # explicit alias: bare `SELECT rowid, ...` would NAME the
-        # rowid column after the integer pk it aliases (`fid`),
-        # colliding with the pk column read via the select list
-        if rtree_for_bbox is not None:
-            # rtree candidate join: non-candidates never leave SQLite.
-            # CROSS JOIN pins the join ORDER — the rtree virtual table
-            # drives (its index takes the id-range + bbox constraints
-            # together), then each candidate makes ONE rowid probe
-            # into the base table.  The reversed order (base table
-            # driving) degenerates to a full rtree scan PER ROW of
-            # the range (EXPLAIN QUERY PLAN verified).
-            qsel = (
-                ", ".join(f'"{table}"."{c}"' for c in src_cols) if src_cols else "NULL"
-            )
-            sel = (f'"{table}".rowid AS "__gpkg_rowid", ' + qsel) if rowids else qsel
-            rows = con.execute(
-                f'SELECT {sel} FROM "{rtree_for_bbox}" __rt '
-                f'CROSS JOIN "{table}" ON "{table}".rowid = __rt.id '
-                f"WHERE __rt.id >= ? AND __rt.id <= ? "
-                f"AND __rt.maxx >= ? AND __rt.minx <= ? "
-                f"AND __rt.maxy >= ? AND __rt.miny <= ?",
-                (lo, hi, bbox[0], bbox[2], bbox[1], bbox[3]),
-            )
-        else:
-            sel = f'rowid AS "__gpkg_rowid", {sel_cols}' if rowids else sel_cols
-            rows = con.execute(
-                f'SELECT {sel} FROM "{table}" WHERE rowid >= ? AND rowid <= ?', (lo, hi)
-            )
-        names = [d[0] for d in rows.description]
-        data = rows.fetchall()
-        # build INTEGER-declared columns with object dtype: the plain
-        # DataFrame constructor promotes int64+NULL to float64, which
-        # silently rounds values > 2^53 BEFORE the storage-class
-        # coercion below could notice
-        int_decl = {n for n, t in fields if t == "bigint"} - {"rowid", "srid"}
-        if rowids:
-            int_decl.add("__gpkg_rowid")
-        if data:
-            arrays = list(zip(*data))
 
-            def col_for(i, nm):
-                vals = arrays[i]
-                if nm in int_decl and any(
-                    v is None or type(v) is float for v in vals
-                ):
-                    return pd.Series(vals, dtype=object)
-                return pd.Series(vals)
-
-            pdf = pd.DataFrame({nm: col_for(i, nm) for i, nm in enumerate(names)})
-        else:
-            pdf = pd.DataFrame(columns=names)
-        if rowids:
-            if "rowid" in pdf.columns:
-                pdf = pdf.drop(columns=["rowid"])  # synthesized rowid wins
-            pdf = pdf.rename(columns={"__gpkg_rowid": "rowid"})
-        if gcol is not None and gcol[0] in pdf.columns:
-            col, _tname, srid = gcol
-            geoms = []
-            keep = [] if bbox is not None else None
-            if to_srid is None:
-                # no reprojection → the blob's payload IS the WKB the
-                # engine wants: strip the GP header instead of the
-                # decode→re-encode round trip (measured 10× on the
-                # per-task decode cost; the embedded WKB passes
-                # through verbatim, exactly what the writer stored).
-                # payload_offset validates magic/envelope/extended-bit
-                # so corrupt or ExtendedGeoPackageBinary blobs still
-                # fail AT THE SCAN with context, and the first payload
-                # byte is checked to be a WKB byte-order marker
-                from .gpb import GpbError, payload_offset
-
-                for b in pdf[col]:
-                    if b is None:
-                        geoms.append(None)
-                        if keep is not None:
-                            keep.append(False)
-                        continue
-                    b = bytes(b)
-                    off = payload_offset(b)
-                    if len(b) <= off or b[off] not in (0, 1):
-                        raise GpbError(
-                            f"GP blob payload is not WKB (first byte "
-                            f"{b[off:off + 1]!r})"
-                        )
-                    payload = b[off:]
-                    if keep is not None:
-                        # exact refine (the rtree candidates carry
-                        # outward-rounded float32 bounds)
-                        keep.append(_env_intersects(gc.from_wkb(payload).envelope(), bbox))
-                    geoms.append(payload)
-            else:
-                for b in pdf[col]:
-                    if b is None:
-                        geoms.append(None)
-                        if keep is not None:
-                            keep.append(False)
-                        continue
-                    g, g_srid = gpb.decode(bytes(b))
-                    if keep is not None:
-                        # bbox is in the FILE's native CRS: test the
-                        # envelope BEFORE reprojection, and skip the
-                        # transform for dropped rows
-                        hit = _env_intersects(g.envelope(), bbox)
-                        keep.append(hit)
-                        if not hit:
-                            geoms.append(None)
-                            continue
-                    if g_srid != to_srid:
-                        from ..crs.osgb import reproject
-
-                        g = reproject(g, g_srid, to_srid)
-                    geoms.append(gc.to_wkb(g))
-            pdf[col] = pd.Series(geoms, index=pdf.index, dtype=object)
-            pdf = pdf.rename(columns={col: "geom"})
-            pdf["srid"] = to_srid if to_srid is not None else srid
-            if keep is not None:
-                pdf = pdf.loc[np.asarray(keep, dtype=bool)]
-        elif bbox is not None:
-            raise ValueError(f"bbox read requested but table {table!r} has no geometry column")
-        pdf["table"] = table
-        _coerce_storage_classes(pdf, fields, table)
-        return pdf.reindex(columns=out_names)
-
-    return rng_df.mapInPandas(scan, schema=schema_ddl)
+def _shares_driver_fs(spark) -> bool:
+    """Do executor tasks see the driver's filesystem, so a task can
+    open a path the driver names?  Guaranteed only on a local[*]
+    master, whose executors run in the driver's machine; a cluster
+    whose executors mount the path at the same place must say so
+    (read_gpkg(distributed=True), write_gpkg(sink_mode="merge"))."""
+    try:
+        return spark.sparkContext.master.startswith("local")
+    except Exception:
+        return False
 
 
 def read_gpkg(
@@ -610,38 +600,30 @@ def read_gpkg(
     (engine-added windowed read; the reference's open always scans
     whole tables): only rows whose geometry envelope intersects the
     box.  A gpkg_rtree_index on the table turns this into an index
-    candidate join inside each scan task (+ exact envelope refine);
+    candidate join inside each range's SQL (+ exact envelope refine);
     without one, every row in range decodes its envelope.
 
-    The scan is DISTRIBUTED: the driver reads only per-table schema
-    metadata and ~n/rows_per_partition rowid range boundaries; each
-    executor task opens the file `mode=ro&immutable=1` and decodes its
-    own range (blob→WKB + optional reprojection), so a multi-GB
-    GeoPackage never materializes on the driver.  Tables whose
-    declared column types can't be mapped deterministically, or whose
-    column names collide with the synthesized geom/srid/table/rowid
-    columns, fall back to the driver-side inferred read (bounded to
-    that table).
+    The driver reads only per-table schema metadata and
+    ~n/rows_per_partition rowid range boundaries; one decode
+    (_range_pdf: blob→WKB + optional reprojection) turns each range
+    into rows.  Column types come from the declared types
+    (_spark_type_for_decl), so every table reads with an explicit
+    schema, empty ones included; a value that does not fit its
+    column's type exactly raises.  Source columns named like the
+    synthesized geom/srid/table/rowid columns are not read.
 
-    SHARED-FILESYSTEM REQUIREMENT: the distributed scan has every
-    task open `path` directly, so on a multi-machine cluster the file
-    must live on a filesystem all executors mount at the same path
-    (NFS, fuse-mounted object store, ...).  distributed=None (default)
-    uses the distributed scan only when the master is local[*];
-    pass distributed=True to assert the path is shared on a real
-    cluster, or distributed=False to force the driver-side read."""
+    Where the ranges decode is a filesystem fact, not a second
+    implementation: with distributed=True each range is a scan task
+    that opens `path` itself, so a multi-GB GeoPackage never
+    materializes on the driver — on a multi-machine cluster the file
+    must then live on a filesystem all executors mount at the same
+    path (NFS, fuse-mounted object store, ...).  With
+    distributed=False the driver decodes the ranges.  None (default)
+    picks distributed only when the master is local[*]."""
     if distributed is None:
-        try:
-            distributed = spark.sparkContext.master.startswith("local")
-        except Exception:
-            distributed = False
+        distributed = _shares_driver_fs(spark)
     if table:
         tables = [table]
-        if bbox is not None and geometry_column(path, table) is None:
-            # fail on the DRIVER, not inside an executor task
-            raise ValueError(
-                f"bbox read requested but table {table!r} has no geometry column"
-            )
     else:
         # a windowed read of a whole file applies to its SPATIAL
         # tables; attribute tables have nothing to window
@@ -650,143 +632,17 @@ def read_gpkg(
         raise ValueError(
             f"no {'spatial ' if bbox is not None else ''}tables to read in {path!r}"
         )
-    dfs = []
-    for t in tables:
-        plan = _table_plan(path, t, to_srid, columns, rowids) if distributed else None
-        if plan is None:
-            pdf = _read_table(path, t, to_srid, columns, rowids, bbox=bbox)
-            pdf["table"] = t
-            if len(pdf) == 0:
-                # Spark cannot infer a schema from zero rows (an empty
-                # bbox window or an empty table must not crash)
-                dfs.append(spark.createDataFrame(pdf, schema=_pdf_spark_schema(pdf, path, t)))
-                continue
-            dfs.append(spark.createDataFrame(pdf))
-        else:
-            dfs.append(
-                _read_table_distributed(
-                    spark, path, t, to_srid, columns, rowids, plan,
-                    rows_per_partition, bbox=bbox,
-                )
-            )
+    dfs = [
+        _scan_table(
+            spark, path, _table_plan(path, t, to_srid, columns, rowids, bbox),
+            rows_per_partition, distributed,
+        )
+        for t in tables
+    ]
     out = dfs[0]
     for d in dfs[1:]:
         out = out.unionByName(d, allowMissingColumns=True)
     return out
-
-
-def _read_table(path, table, to_srid, columns, rowids, bbox=None) -> pd.DataFrame:
-    con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-    try:
-        gcol = geometry_column(path, table)
-        if bbox is not None and gcol is None:
-            raise ValueError(f"bbox read requested but table {table!r} has no geometry column")
-        # the driver fallback uses the rtree candidate join too (same
-        # rtree-drives-the-join ordering as the distributed path):
-        # without it a bbox read of a multi-GB indexed table would
-        # decode every blob on the driver just to discard misses
-        rt = None
-        if bbox is not None and gcol is not None:
-            rt = f"rtree_{table}_{gcol[0]}"
-            if not _has_table(con, rt):
-                rt = None
-        if rt is not None:
-            sel = (f'"{table}".rowid AS "__gpkg_rowid", ' if rowids else "") + f'"{table}".*'
-            rows = con.execute(
-                f'SELECT {sel} FROM "{rt}" __rt '
-                f'CROSS JOIN "{table}" ON "{table}".rowid = __rt.id '
-                f"WHERE __rt.maxx >= ? AND __rt.minx <= ? "
-                f"AND __rt.maxy >= ? AND __rt.miny <= ?",
-                (bbox[0], bbox[2], bbox[1], bbox[3]),
-            )
-        else:
-            # alias rowid explicitly — bare `rowid, *` names the column
-            # after the integer pk it aliases, colliding with `*`'s copy
-            sel = 'rowid AS "__gpkg_rowid", *' if rowids else "*"
-            rows = con.execute(f'SELECT {sel} FROM "{table}"')
-        names = [d[0] for d in rows.description]
-        data = rows.fetchall()
-        # same int64+NULL→float64 protection as the distributed scan:
-        # INTEGER-declared columns holding a NULL (or a stray REAL)
-        # must not promote to float64, which silently rounds values
-        # beyond 2^53 — this fallback is the default on non-local
-        # masters and the documented remedy for coercion errors
-        int_decl = {
-            r[1]
-            for r in con.execute(f'PRAGMA table_info("{table}")')
-            if "INT" in (r[2] or "").upper()
-        }
-        if data:
-            arrays = list(zip(*data))
-            pdf = pd.DataFrame(
-                {
-                    nm: (
-                        pd.Series(arrays[i], dtype=object)
-                        if nm in int_decl
-                        and any(v is None or type(v) is float for v in arrays[i])
-                        else pd.Series(arrays[i])
-                    )
-                    for i, nm in enumerate(names)
-                }
-            )
-        else:
-            pdf = pd.DataFrame(columns=names)
-        if rowids:
-            if "rowid" in pdf.columns:
-                pdf = pdf.drop(columns=["rowid"])  # synthesized rowid wins
-            pdf = pdf.rename(columns={"__gpkg_rowid": "rowid"})
-        if gcol is not None and gcol[0] in pdf.columns:
-            col, _tname, srid = gcol
-            # a real attribute column named 'geom' (or 'rowid' with
-            # rowids=True) would DUPLICATE after the rename below —
-            # the geometry/rowid win deterministically, as documented
-            if col != "geom" and "geom" in pdf.columns:
-                pdf = pdf.drop(columns=["geom"])
-            geoms = []
-            keep_rows = [] if bbox is not None else None
-            for b in pdf[col]:
-                if b is None:
-                    geoms.append(None)
-                    if keep_rows is not None:
-                        keep_rows.append(False)
-                    continue
-                g, g_srid = gpb.decode(bytes(b))
-                if keep_rows is not None:
-                    hit = _env_intersects(g.envelope(), bbox)
-                    keep_rows.append(hit)
-                    if not hit:
-                        geoms.append(None)
-                        continue
-                if to_srid is not None and g_srid != to_srid:
-                    from ..crs.osgb import reproject
-
-                    g = reproject(g, g_srid, to_srid)
-                geoms.append(gc.to_wkb(g))
-            pdf[col] = pd.Series(geoms, index=pdf.index, dtype=object)
-            pdf = pdf.rename(columns={col: "geom"})
-            pdf["srid"] = to_srid if to_srid is not None else srid
-            if keep_rows is not None:
-                pdf = pdf.loc[np.asarray(keep_rows, dtype=bool)]
-        # drop the auto fid pk column like the reference suppresses pk
-        if "fid" in pdf.columns:
-            pdf = pdf.drop(columns=["fid"])
-        if columns:
-            keep = [c for c in pdf.columns if c in columns or c in ("geom", "srid", "rowid")]
-            pdf = pdf[keep]
-        return pdf
-    finally:
-        con.close()
-
-
-_SQLITE_TYPES = {
-    "int64": "INTEGER",
-    "int32": "INTEGER",
-    "int16": "INTEGER",
-    "float64": "REAL",
-    "float32": "REAL",
-    "bool": "BOOLEAN",
-    "object": "TEXT",
-}
 
 
 RTREE_EXT_URL = "http://www.geopackage.org/spec120/#extension_rtree"
@@ -915,8 +771,7 @@ def _next_fid_base(con: sqlite3.Connection, table: str) -> int:
 
 
 def _sink_conversions(fields):
-    """Column groups needing value conversion before a SQLite bind —
-    the same conversions the legacy driver loop applied per value
+    """Column groups needing value conversion before a SQLite bind
     (ISO strings for timestamps/dates, 0/1 for booleans;
     gpkg.clj:518), done batch-at-a-time on executors."""
     ts = {f.name for f in fields if f.dataType.typeName() in ("timestamp", "timestamp_ntz")}
@@ -950,6 +805,16 @@ def _sink_select_exprs(spatial, geom_col, fields):
         else:
             exprs.append(F.col(f.name))
     return exprs
+
+
+def _fold_extent(ext: list, xmin, ymin, xmax, ymax):
+    """Widen ext [xmin, ymin, xmax, ymax] in place to cover an envelope
+    (xmin None: no geometry, ext unchanged)."""
+    if xmin is not None:
+        ext[0] = min(ext[0], xmin)
+        ext[1] = min(ext[1], ymin)
+        ext[2] = max(ext[2], xmax)
+        ext[3] = max(ext[3], ymax)
 
 
 def _convert_batch(pdf, spatial, geom_col, srid, attr_names, ts_names, date_names, bool_names):
@@ -994,20 +859,18 @@ def _convert_batch(pdf, spatial, geom_col, srid, attr_names, ts_names, date_name
     return cols, ext, env_rows
 
 
-def _sink_parts_df(df, geom_col: Optional[str], srid: int, fields, tmpdir: str, batch_size: int, with_envelope: bool = False):
+def _sink_parts_df(df, geom_col: Optional[str], srid: int, fields, tmpdir: str, with_envelope: bool = False):
     """Distributed GeoPackage sink, stage 1: every task encodes its
     partition into its OWN temp SQLite part file (plain rowid table,
-    insertion order preserved) and reports (pid, path, nrows, extent).
+    insertion order preserved, one executemany per Arrow batch) and
+    reports (pid, path, nrows, extent).
 
     Requires driver and executors to share a filesystem (local[N], or
     a shared mount) — the caller gates on that.  The driver then
     ATTACH-merges the parts in partition order at C speed (measured
     3.3M rows/s vs 30k rows/s for the per-row toLocalIterator
     stream), which is the write-side mirror of the rowid-range
-    distributed scan (this file, _read_table_distributed).
-
-    batch_size is accepted for signature parity with the sink but
-    unused here: the kernel batches by Arrow batch size."""
+    distributed scan (this file, _scan_table)."""
     spatial = geom_col is not None and geom_col in df.columns
     with_envelope = with_envelope and spatial
     ts_names, date_names, bool_names = _sink_conversions(fields)
@@ -1031,8 +894,7 @@ def _sink_parts_df(df, geom_col: Optional[str], srid: int, fields, tmpdir: str, 
         path = os.path.join(tmpdir, f"gpkg_part_{pid}_{uuid.uuid4().hex}.db")
         con = None
         n = 0
-        x0 = y0 = math.inf
-        x1 = y1 = -math.inf
+        ext = [math.inf, math.inf, -math.inf, -math.inf]
         try:
             for pdf in batches:
                 if con is None:
@@ -1040,7 +902,7 @@ def _sink_parts_df(df, geom_col: Optional[str], srid: int, fields, tmpdir: str, 
                     con.execute("PRAGMA journal_mode = OFF")
                     con.execute("PRAGMA synchronous = OFF")
                     con.execute(f"CREATE TABLE data ({part_ddl})")
-                cols, ext, env_rows = _convert_batch(
+                cols, batch_ext, env_rows = _convert_batch(
                     pdf, spatial, geom_col, srid, attr_names,
                     ts_names, date_names, bool_names,
                 )
@@ -1050,14 +912,7 @@ def _sink_parts_df(df, geom_col: Optional[str], srid: int, fields, tmpdir: str, 
                     cols = cols + [[e[i] for e in env_rows] for i in range(4)]
                 con.executemany(ins, zip(*cols))
                 n += len(pdf)
-                if ext[0] < x0:
-                    x0 = ext[0]
-                if ext[1] < y0:
-                    y0 = ext[1]
-                if ext[2] > x1:
-                    x1 = ext[2]
-                if ext[3] > y1:
-                    y1 = ext[3]
+                _fold_extent(ext, *batch_ext)
             if con is not None:
                 con.commit()
         finally:
@@ -1067,10 +922,8 @@ def _sink_parts_df(df, geom_col: Optional[str], srid: int, fields, tmpdir: str, 
             yield pd.DataFrame(
                 {
                     "pid": [pid], "path": [path], "nrows": [n],
-                    "xmin": [None if x0 == math.inf else x0],
-                    "ymin": [None if y0 == math.inf else y0],
-                    "xmax": [None if x1 == -math.inf else x1],
-                    "ymax": [None if y1 == -math.inf else y1],
+                    **{k: [None if math.isinf(v) else v]
+                       for k, v in zip(("xmin", "ymin", "xmax", "ymax"), ext)},
                 }
             )
 
@@ -1090,25 +943,19 @@ def _sink_encode_plan(df, geom_col: Optional[str], srid: int, fields):
 
         [gp_blob, xmin, ymin, xmax, ymax,]  attr0, attr1, ...
 
-    with timestamps/dates ISO-formatted and booleans 0/1 — exactly
-    the values the old driver-side loop produced, so round-trip
-    hashes are unchanged.  The envelope doubles ride along per row
-    (NULL for null/empty geometry) and the driver folds them into
-    the layer extent while it streams batches into executemany: one
-    pass, O(1) driver state, no persist/recompute that a separate
-    extent agg job would need, and no accumulator (whose update
-    delivery is asynchronous and double-counts on task retry).
+    with the same values the merge sink's part files hold
+    (_convert_batch: timestamps/dates ISO-formatted, booleans 0/1).
+    The envelope doubles ride along per row (NULL for null/empty
+    geometry) and the driver folds them into the layer extent while
+    it streams batches into executemany: one pass, O(1) driver state,
+    no persist/recompute that a separate extent agg job would need,
+    and no accumulator (whose update delivery is asynchronous and
+    double-counts on task retry).
 
-    Returns (encoded_df_or_None, n_prefix_cols).  None means the
-    input needs no conversion at all (attribute-only, no
-    timestamp/date/boolean columns) — the caller streams it
-    directly."""
+    Returns (encoded_df, n_prefix_cols)."""
     spatial = geom_col is not None and geom_col in df.columns
     ts_names, date_names, bool_names = _sink_conversions(fields)
-    if not spatial and not (ts_names or date_names or bool_names):
-        return None, 0
     attr_names = [f.name for f in fields]
-    in_cols = ([geom_col] if spatial else []) + attr_names
     ddl_parts = []
     if spatial:
         ddl_parts += [
@@ -1147,6 +994,170 @@ def _sink_encode_plan(df, geom_col: Optional[str], srid: int, fields):
     )
 
 
+def _attach_copy(con: sqlite3.Connection, part_path: str, sql: str, params=()):
+    """Run one INSERT … SELECT over the part file at part_path,
+    ATTACHed as __gpkg_part, and commit it.  ATTACH cannot run inside
+    a transaction, so the caller has none open."""
+    con.execute("ATTACH ? AS __gpkg_part", (part_path,))
+    try:
+        con.execute(sql, params)
+        con.commit()
+    finally:
+        # a failed INSERT leaves an open implicit transaction, in which
+        # DETACH raises 'database is locked' and masks the root cause -
+        # roll back first (no-op when clean)
+        con.rollback()
+        con.execute("DETACH __gpkg_part")
+
+
+@contextlib.contextmanager
+def _part_files(df, geom_col: Optional[str], srid: int, fields, with_envelope: bool = False):
+    """Encode df into one temp part file per partition
+    (_sink_parts_df), yield the parts' rows in partition order, and
+    delete the files afterwards."""
+    tmpdir = tempfile.mkdtemp(prefix="gpkg_parts_")
+    try:
+        parts = _sink_parts_df(df, geom_col, srid, fields, tmpdir, with_envelope=with_envelope)
+        yield sorted(parts.collect(), key=lambda r: r.pid)
+    finally:
+        shutil.rmtree(tmpdir, ignore_errors=True)
+
+
+def _sink_merge(con, df, table, ins_cols, existed, geom_col, srid, fields, ext, rtree, pre_max_fid):
+    """merge sink: part files encoded on executors, ATTACH-merged in
+    partition order.  rtree: the name of a NEW spatial index to
+    bulk-load from the parts' envelopes, or None.
+
+    Each part merge commits on its own (ATTACH cannot run inside a
+    transaction); on failure the pre-merge rows and AUTOINCREMENT
+    high-water mark are restored, emulating the single-commit
+    atomicity of the stream sink."""
+    with _part_files(df, geom_col, srid, fields, with_envelope=rtree is not None) as parts:
+        # the part encode ran first: a failure there left the metadata
+        # transaction uncommitted, so the table never appears
+        con.commit()
+        start_max = con.execute(f'SELECT COALESCE(MAX(rowid), 0) FROM "{table}"').fetchone()[0]
+        # pre-merge AUTOINCREMENT high-water mark, for the failure
+        # restore below: resetting to MAX(rowid) would re-enable fid
+        # reuse after deletes, and a foreign GPKG without any
+        # AUTOINCREMENT table has no sqlite_sequence at all
+        start_seq = None
+        if _has_table(con, "sqlite_sequence"):
+            row = con.execute(
+                "SELECT seq FROM sqlite_sequence WHERE name = ?", (table,)
+            ).fetchone()
+            start_seq = row[0] if row else None
+        sel_cols = ", ".join(f'"c{i}"' for i in range(len(ins_cols)))
+        ins = (
+            f'INSERT INTO "{table}" ({", ".join(chr(34) + c + chr(34) for c in ins_cols)}) '
+            f"SELECT {sel_cols} FROM __gpkg_part.data ORDER BY rowid"
+        )
+        part_bases = []
+        try:
+            for r in parts:
+                part_bases.append((_next_fid_base(con, table), r.path))
+                _attach_copy(con, r.path, ins)
+                _fold_extent(ext, r.xmin, r.ymin, r.xmax, r.ymax)
+        except Exception:
+            con.rollback()
+            if existed:
+                con.execute(f'DELETE FROM "{table}" WHERE rowid > ?', (start_max,))
+                if _has_table(con, "sqlite_sequence"):
+                    if start_seq is not None:
+                        con.execute(
+                            "UPDATE sqlite_sequence SET seq = ? WHERE name = ?",
+                            (start_seq, table),
+                        )
+                    else:
+                        con.execute("DELETE FROM sqlite_sequence WHERE name = ?", (table,))
+            else:
+                drop_table_con(con, table)
+            con.commit()
+            raise
+        if rtree is not None:
+            # second pass over the retained part files: bulk-load the
+            # rtree from the executor-computed envelopes (fid = part
+            # base + part rowid, exact because INSERT..SELECT ORDER BY
+            # rowid assigns consecutive autoincrement ids), THEN
+            # install the maintenance triggers for future writers.
+            _create_spatial_index_structures(con, table, geom_col)
+            con.commit()
+            # rtree inserts revisit interior pages all over the tree;
+            # with the default 2 MB page cache the build is
+            # I/O-churn-bound.  A build-scoped 1 GB cache measured 55k
+            # -> 83k rows/s at 5M rows (round 6; Morton-ordered inserts
+            # gained only 1.37x and nothing on top of the cache —
+            # negative result recorded in OPTIMIZATION_r06.md).
+            con.execute("PRAGMA cache_size = -1048576")
+            _backfill_rtree(con, table, geom_col, rtree, pre_max_fid)
+            con.commit()
+            for base, ppath in part_bases:
+                _attach_copy(
+                    con, ppath,
+                    f'INSERT OR REPLACE INTO "{rtree}" '
+                    f'SELECT ? + rowid, "e0", "e2", "e1", "e3" '
+                    f'FROM __gpkg_part.data WHERE "e0" IS NOT NULL',
+                    (base,),
+                )
+            con.execute("PRAGMA cache_size = -2000")
+
+
+def _sink_stream(con, df, table, ins_cols, geom_col, srid, fields, ext, rtree, pre_max_fid, batch_size):
+    """stream sink: rows encoded on executors (_sink_encode_plan)
+    return through toLocalIterator; the driver folds the envelope
+    prefix into the extent and batches executemany (reference batch
+    4000, gpkg.clj:1074).  rtree: the name of a NEW spatial index,
+    loaded per batch from the rows' envelopes, or None."""
+    enc, n_prefix = _sink_encode_plan(df, geom_col, srid, fields)
+    ins = (
+        f'INSERT INTO "{table}" ({",".join(chr(34) + c + chr(34) for c in ins_cols)}) '
+        f'VALUES ({",".join("?" * len(ins_cols))})'
+    )
+    if rtree is not None:
+        con.execute(
+            f'CREATE VIRTUAL TABLE IF NOT EXISTS "{rtree}" '
+            'USING rtree("id", "minx", "maxx", "miny", "maxy")'
+        )
+        # build-scoped big page cache (see _sink_merge), restored below
+        con.execute("PRAGMA cache_size = -1048576")
+        _backfill_rtree(con, table, geom_col, rtree, pre_max_fid)
+    batch: List[tuple] = []
+    envs: List = []
+
+    def flush():
+        if not batch:
+            return
+        if rtree is None:
+            con.executemany(ins, batch)
+        else:
+            base = _next_fid_base(con, table)
+            con.executemany(ins, batch)
+            con.executemany(
+                f'INSERT OR REPLACE INTO "{rtree}" VALUES (?,?,?,?,?)',
+                [(base + 1 + i, e[0], e[2], e[1], e[3]) for i, e in enumerate(envs) if e[0] is not None],
+            )
+        batch.clear()
+        envs.clear()
+
+    # sqlite3 binds bytearray/bool natively: no per-value conversion
+    for row in enc.toLocalIterator():
+        t = tuple(row)
+        if n_prefix:
+            _fold_extent(ext, *t[1:5])
+            if rtree is not None:
+                envs.append(t[1:5])
+            t = t[:1] + t[5:]
+        batch.append(t)
+        if len(batch) >= batch_size:
+            flush()
+    flush()
+    if rtree is not None:
+        # rtree rows are already loaded per batch; install the
+        # maintenance triggers + extension row for future writers
+        _create_spatial_index_structures(con, table, geom_col)
+        con.execute("PRAGMA cache_size = -2000")
+
+
 def write_gpkg(
     df,
     path: str,
@@ -1156,14 +1167,16 @@ def write_gpkg(
     if_exists: str = "fail",  # fail | append | delete-rows | drop-table
     batch_size: int = 4000,
     add_spatial_index: bool = False,
-    sink_mode: str = "auto",  # auto | merge | stream | driver
+    sink_mode: str = "auto",  # auto | merge | stream
 ):
     """DataFrame → GeoPackage feature/attribute table.
 
-    The geometry encode (WKB decode → envelope → GP blob) always runs
-    DISTRIBUTED on executors; SQLite is single-writer, so only the
-    final INSERT stream is serial (the reference's writer too,
-    gpkg.clj:914-962).  Three sink modes:
+    The encode (WKB decode → envelope → GP blob, ISO timestamps and
+    dates, 0/1 booleans) always runs DISTRIBUTED on executors, in one
+    batch converter (_convert_batch); SQLite is single-writer, so only
+    the final insert is serial (the reference's writer too,
+    gpkg.clj:914-962).  How the encoded rows reach the driver's file
+    is a shared-filesystem fact, not a second implementation:
 
       merge  — every task writes its partition into its own temp
                SQLite part file; the driver ATTACH-merges them in
@@ -1172,29 +1185,31 @@ def write_gpkg(
                executors to share a filesystem (local[N] or a shared
                mount), because the part files are created under the
                driver's temp dir.
-      stream — executor-side pre-encode (_sink_encode_plan), rows
-               return via toLocalIterator, driver is a pure batched
-               executemany (reference batch 4000, gpkg.clj:1074).
-               Works on any cluster topology.
-      driver — the legacy row-at-a-time driver loop (differential /
-               throughput yardstick for tests).
+      stream — rows return via toLocalIterator and the driver is a
+               pure batched executemany of batch_size rows (reference
+               batch 4000, gpkg.clj:1074).  Works on any cluster
+               topology.
       auto   — merge when the master is local[*] (shared FS is then
                guaranteed), else stream.
 
     Layer extent folds into gpkg_contents (gpkg.clj:903-912,
-    1124-1126) in all modes.  Row order (and therefore fid
-    assignment) is the DataFrame's partition order in every mode.
+    1124-1126) in both modes.  Row order (and therefore fid
+    assignment) is the DataFrame's partition order in both.
 
-    Failure atomicity: stream/driver modes commit once at the end
-    (all-or-nothing, like the reference).  merge mode commits
-    per-part (ATTACH cannot run inside a transaction) and restores
-    the pre-merge row state on failure — except rows removed by
-    if_exists="delete-rows", whose deletion is already committed
-    before the merge starts."""
+    Failure atomicity: stream commits once at the end (all-or-nothing,
+    like the reference).  merge commits per part (ATTACH cannot run
+    inside a transaction) and restores the pre-merge row state on
+    failure — except rows removed by if_exists="delete-rows", whose
+    deletion is already committed before the merge starts."""
     if if_exists not in ("fail", "append", "delete-rows", "drop-table"):
         raise ValueError(
             f"if_exists must be one of fail/append/delete-rows/drop-table, got {if_exists!r}"
         )
+    if sink_mode not in ("auto", "merge", "stream"):
+        raise ValueError(f"sink_mode must be auto/merge/stream, got {sink_mode!r}")
+    mode = sink_mode
+    if mode == "auto":
+        mode = "merge" if _shares_driver_fs(df.sparkSession) else "stream"
     spatial = geom_col is not None and geom_col in df.columns
     con = sqlite3.connect(path)
     con.execute("PRAGMA journal_mode = WAL")
@@ -1253,9 +1268,7 @@ def write_gpkg(
                 "INSERT OR REPLACE INTO gpkg_contents (table_name, data_type, identifier, srs_id) VALUES (?,?,?,?)",
                 (table, "features" if spatial else "attributes", table, srid if spatial else None),
             )
-        col_names = ([geom_col] if spatial else []) + [f.name for f in fields]
-        placeholders = ",".join("?" * len(col_names))
-        ins = f'INSERT INTO "{table}" ({",".join(chr(34)+c+chr(34) for c in col_names)}) VALUES ({placeholders})'
+        ins_cols = ([geom_col] if spatial else []) + [f.name for f in fields]
         ext = [math.inf, math.inf, -math.inf, -math.inf]
         if exists and if_exists == "append" and spatial:
             # FOLD the appended batch's extent with the recorded layer
@@ -1268,18 +1281,6 @@ def write_gpkg(
             ).fetchone()
             if row and row[0] is not None:
                 ext = [row[0], row[1], row[2], row[3]]
-        batch: List[tuple] = []
-
-        if sink_mode not in ("auto", "merge", "stream", "driver"):
-            raise ValueError(f"sink_mode must be auto/merge/stream/driver, got {sink_mode!r}")
-        mode = sink_mode
-        if mode == "auto":
-            try:
-                is_local = df.sparkSession.sparkContext.master.startswith("local")
-            except Exception:
-                is_local = False
-            mode = "merge" if is_local else "stream"
-
         # rtree spatial index (reference create-spatial-index!,
         # gpkg.clj:863-876).  A PRE-EXISTING index on the table means
         # its triggers maintain it through our inserts (the ST_*
@@ -1288,238 +1289,21 @@ def write_gpkg(
         # triggers (which would decode every blob through the python
         # ST functions) are only created afterwards, for future
         # single-row writers.
-        rtree_name = f"rtree_{table}_{geom_col}" if spatial else None
-        pre_indexed = spatial and _has_table(con, rtree_name)
-        bulk_index = spatial and add_spatial_index and not pre_indexed
+        rtree = f"rtree_{table}_{geom_col}" if spatial else None
+        if rtree is not None and (not add_spatial_index or _has_table(con, rtree)):
+            rtree = None
         # rows already in the table before this write (append onto an
         # unindexed table) must be indexed too — see _backfill_rtree
         pre_max_fid = (
             con.execute(f'SELECT COALESCE(MAX(rowid), 0) FROM "{table}"').fetchone()[0]
-            if bulk_index and exists
+            if rtree is not None and exists
             else 0
         )
-        env_batch: List = []
-        if bulk_index and mode in ("stream", "driver"):
-            con.execute(
-                f'CREATE VIRTUAL TABLE IF NOT EXISTS "{rtree_name}" '
-                'USING rtree("id", "minx", "maxx", "miny", "maxy")'
-            )
-            # build-scoped big page cache (see merge-mode note): rtree
-            # inserts churn interior pages; restored after the build
-            con.execute("PRAGMA cache_size = -1048576")
-            _backfill_rtree(con, table, geom_col, rtree_name, pre_max_fid)
-
-        def flush():
-            if batch:
-                base = _next_fid_base(con, table) if env_batch else None
-                con.executemany(ins, batch)
-                if env_batch:
-                    rt = [
-                        (base + 1 + i, e[0], e[2], e[1], e[3])
-                        for i, e in enumerate(env_batch)
-                        if e is not None and e[0] is not None
-                    ]
-                    if rt:
-                        con.executemany(
-                            f'INSERT OR REPLACE INTO "{rtree_name}" VALUES (?,?,?,?,?)',
-                            rt,
-                        )
-                    env_batch.clear()
-                batch.clear()
+        sink_geom = geom_col if spatial else None
         if mode == "merge":
-            import shutil
-            import tempfile
-
-            tmpdir = tempfile.mkdtemp(prefix="gpkg_sink_")
-            try:
-                parts = sorted(
-                    _sink_parts_df(
-                        df, geom_col if spatial else None, srid, fields, tmpdir,
-                        batch_size, with_envelope=bulk_index,
-                    ).collect(),
-                    key=lambda r: r.pid,
-                )
-                # ATTACH cannot run inside a transaction: close the
-                # metadata transaction first.  Each part merge then
-                # commits individually; on failure the pre-merge row
-                # state is restored below (the legacy single-commit
-                # atomicity, emulated).
-                con.commit()
-                start_max = con.execute(
-                    f'SELECT COALESCE(MAX(rowid), 0) FROM "{table}"'
-                ).fetchone()[0]
-                # pre-merge AUTOINCREMENT high-water mark, for the
-                # failure restore below: resetting to MAX(rowid) would
-                # re-enable fid reuse after deletes, and a foreign
-                # GPKG without any AUTOINCREMENT table has no
-                # sqlite_sequence at all
-                start_seq = None
-                if _has_table(con, "sqlite_sequence"):
-                    row = con.execute(
-                        "SELECT seq FROM sqlite_sequence WHERE name = ?", (table,)
-                    ).fetchone()
-                    start_seq = row[0] if row else None
-                sel_cols = ", ".join(f'"c{i}"' for i in range(len(col_names)))
-                ins_cols = ",".join(chr(34) + c + chr(34) for c in col_names)
-                part_bases = []
-                try:
-                    for r in parts:
-                        part_bases.append((_next_fid_base(con, table), r.path))
-                        con.execute("ATTACH ? AS __gpkg_part", (r.path,))
-                        try:
-                            con.execute(
-                                f'INSERT INTO "{table}" ({ins_cols}) '
-                                f"SELECT {sel_cols} FROM __gpkg_part.data ORDER BY rowid"
-                            )
-                            con.commit()
-                        finally:
-                            # a failed INSERT leaves an open implicit transaction,
-                            # in which DETACH raises 'database is locked' and masks
-                            # the root cause - roll back first (no-op when clean)
-                            con.rollback()
-                            con.execute("DETACH __gpkg_part")
-                        if spatial and r.xmin is not None:
-                            if r.xmin < ext[0]:
-                                ext[0] = r.xmin
-                            if r.ymin < ext[1]:
-                                ext[1] = r.ymin
-                            if r.xmax > ext[2]:
-                                ext[2] = r.xmax
-                            if r.ymax > ext[3]:
-                                ext[3] = r.ymax
-                except Exception:
-                    con.rollback()
-                    if exists:
-                        con.execute(
-                            f'DELETE FROM "{table}" WHERE rowid > ?', (start_max,)
-                        )
-                        if _has_table(con, "sqlite_sequence"):
-                            if start_seq is not None:
-                                con.execute(
-                                    "UPDATE sqlite_sequence SET seq = ? WHERE name = ?",
-                                    (start_seq, table),
-                                )
-                            else:
-                                con.execute(
-                                    "DELETE FROM sqlite_sequence WHERE name = ?",
-                                    (table,),
-                                )
-                    else:
-                        drop_table_con(con, table)
-                    con.commit()
-                    raise
-                if bulk_index:
-                    # second pass over the retained part files: bulk-
-                    # load the rtree from the executor-computed
-                    # envelopes (fid = part base + part rowid, exact
-                    # because INSERT..SELECT ORDER BY rowid assigns
-                    # consecutive autoincrement ids), THEN install the
-                    # maintenance triggers for future writers.
-                    _create_spatial_index_structures(con, table, geom_col)
-                    con.commit()
-                    # rtree inserts revisit interior pages all over the
-                    # tree; with the default 2 MB page cache the build
-                    # is I/O-churn-bound.  A build-scoped 1 GB cache
-                    # measured 55k -> 83k rows/s at 5M rows (round 6;
-                    # Morton-ordered inserts gained only 1.37x and
-                    # nothing on top of the cache — negative result
-                    # recorded in OPTIMIZATION_r06.md).  Restored below.
-                    con.execute("PRAGMA cache_size = -1048576")
-                    _backfill_rtree(con, table, geom_col, rtree_name, pre_max_fid)
-                    con.commit()
-                    for base, ppath in part_bases:
-                        con.execute("ATTACH ? AS __gpkg_part", (ppath,))
-                        try:
-                            con.execute(
-                                f'INSERT OR REPLACE INTO "{rtree_name}" '
-                                f'SELECT ? + rowid, "e0", "e2", "e1", "e3" '
-                                f'FROM __gpkg_part.data WHERE "e0" IS NOT NULL',
-                                (base,),
-                            )
-                            con.commit()
-                        finally:
-                            # a failed INSERT leaves an open implicit transaction,
-                            # in which DETACH raises 'database is locked' and masks
-                            # the root cause - roll back first (no-op when clean)
-                            con.rollback()
-                            con.execute("DETACH __gpkg_part")
-                    con.execute("PRAGMA cache_size = -2000")
-            finally:
-                shutil.rmtree(tmpdir, ignore_errors=True)
-        elif mode == "stream":
-            enc, n_prefix = _sink_encode_plan(df, geom_col if spatial else None, srid, fields)
+            _sink_merge(con, df, table, ins_cols, exists, sink_geom, srid, fields, ext, rtree, pre_max_fid)
         else:
-            enc, n_prefix = (None, 0)
-        if mode == "merge":
-            pass
-        elif enc is not None:
-            # distributed pre-encode: rows arrive INSERT-ready; the
-            # driver only folds the envelope prefix into the extent
-            # and batches executemany (sqlite3 binds bytearray/bool
-            # natively, no per-value conversion needed)
-            for row in enc.toLocalIterator():
-                t = tuple(row)
-                if n_prefix:
-                    x0 = t[1]
-                    if x0 is not None:
-                        if x0 < ext[0]:
-                            ext[0] = x0
-                        if t[2] < ext[1]:
-                            ext[1] = t[2]
-                        if t[3] > ext[2]:
-                            ext[2] = t[3]
-                        if t[4] > ext[3]:
-                            ext[3] = t[4]
-                    if bulk_index:
-                        env_batch.append(
-                            (t[1], t[2], t[3], t[4]) if x0 is not None else None
-                        )
-                    t = t[:1] + t[5:]
-                batch.append(t)
-                if len(batch) >= batch_size:
-                    flush()
-        else:
-            # attribute-only table with no convertible columns (enc is
-            # None from the planner) or sink_mode="driver": stream the
-            # rows directly / through the legacy driver-side loop
-            for row in df.toLocalIterator():
-                vals = []
-                row_env = None
-                if spatial:
-                    wkb = row[geom_col]
-                    if wkb is None:
-                        vals.append(None)
-                    else:
-                        g = gc.from_wkb(bytes(wkb))
-                        env = g.envelope()
-                        if env:
-                            row_env = env
-                            ext[0] = min(ext[0], env[0])
-                            ext[1] = min(ext[1], env[1])
-                            ext[2] = max(ext[2], env[2])
-                            ext[3] = max(ext[3], env[3])
-                        vals.append(gpb.encode(g, srid))
-                if bulk_index:
-                    env_batch.append(row_env)
-                for f in fields:
-                    v = row[f.name]
-                    if isinstance(v, (bytes, bytearray)):
-                        v = bytes(v)
-                    elif isinstance(v, bool):
-                        v = 1 if v else 0  # booleans round-trip 0/1 (gpkg.clj:518)
-                    elif isinstance(v, (_dt.datetime, _dt.date)):
-                        v = v.isoformat()
-                    vals.append(v)
-                batch.append(tuple(vals))
-                if len(batch) >= batch_size:
-                    flush()
-        flush()
-        if bulk_index and mode in ("stream", "driver"):
-            # rtree rows are already bulk-loaded per flush; install
-            # the maintenance triggers + extension row for future
-            # single-row writers
-            _create_spatial_index_structures(con, table, geom_col)
-            con.execute("PRAGMA cache_size = -2000")
+            _sink_stream(con, df, table, ins_cols, sink_geom, srid, fields, ext, rtree, pre_max_fid, batch_size)
         if spatial and ext[0] != math.inf:
             con.execute(
                 "UPDATE gpkg_contents SET min_x=?, min_y=?, max_x=?, max_y=? WHERE table_name=?",
@@ -1698,13 +1482,14 @@ def amend_gpkg(
       right-join — + delete unmatched target rows, insert unmatched source
     Implemented as the same set-based temp-table plan: stage the new
     values, mark duplicates, UPDATE singular matches, then per-method
-    insert/delete/multiply.  Spark sources on a local[*] master stage
-    DISTRIBUTED (each task writes a temp SQLite part file, the driver
-    ATTACH-copies them into the temp table — same fast path as
-    write_gpkg's merge sink); otherwise rows stream via
-    toLocalIterator (never collected whole to the driver).  Staging
-    lands in a TEMP table, so the user table's mutation plan stays a
-    single atomic transaction in both paths.
+    insert/delete/multiply.  Staging follows write_gpkg's sinks: when
+    executors share the driver's filesystem (a local[*] master), Spark
+    sources stage DISTRIBUTED (each task writes a temp SQLite part
+    file, the driver ATTACH-copies them into the temp table — the merge
+    sink's path); otherwise rows stream via toLocalIterator (never
+    collected whole to the driver).  Staging lands in a TEMP table, so
+    the user table's mutation plan stays a single atomic transaction
+    either way.
     """
     is_spark = hasattr(df, "toLocalIterator")
     if is_spark:
@@ -1717,12 +1502,7 @@ def amend_gpkg(
     key_pos = all_cols.index(key)
     set_cols = [c for c in all_cols if c != key]
     set_pos = [all_cols.index(c) for c in set_cols]
-    use_merge = False
-    if is_spark:
-        try:
-            use_merge = df.sparkSession.sparkContext.master.startswith("local")
-        except Exception:
-            use_merge = False
+    use_merge = is_spark and _shares_driver_fs(df.sparkSession)
     con = sqlite3.connect(path)
     # an rtree-indexed geometry column's maintenance triggers call the
     # ST_* functions on whatever connection mutates the table
@@ -1735,36 +1515,16 @@ def amend_gpkg(
             + ", __singular INTEGER DEFAULT 1)"
         )
         if use_merge:
-            import shutil
-            import tempfile
-
             ordered = df.select(key, *set_cols)
-            tmpdir = tempfile.mkdtemp(prefix="gpkg_amend_")
-            try:
-                parts = sorted(
-                    _sink_parts_df(
-                        ordered, None, 0, ordered.schema.fields, tmpdir, 4000
-                    ).collect(),
-                    key=lambda r: r.pid,
-                )
-                ncols = 1 + len(set_cols)
-                sel = ", ".join(f'"c{i}"' for i in range(ncols))
+            sel = ", ".join(f'"c{i}"' for i in range(1 + len(set_cols)))
+            with _part_files(ordered, None, 0, ordered.schema.fields) as parts:
                 for r in parts:
-                    con.execute("ATTACH ? AS __gpkg_part", (r.path,))
-                    try:
-                        con.execute(
-                            f"INSERT INTO __amend ({cols_ddl}) "
-                            f"SELECT {sel} FROM __gpkg_part.data ORDER BY rowid"
-                        )
-                        con.commit()  # temp-table insert; DETACH needs no open txn
-                    finally:
-                        # a failed INSERT leaves an open implicit transaction,
-                        # in which DETACH raises 'database is locked' and masks
-                        # the root cause - roll back first (no-op when clean)
-                        con.rollback()
-                        con.execute("DETACH __gpkg_part")
-            finally:
-                shutil.rmtree(tmpdir, ignore_errors=True)
+                    # temp-table insert: the user table is untouched
+                    _attach_copy(
+                        con, r.path,
+                        f"INSERT INTO __amend ({cols_ddl}) "
+                        f"SELECT {sel} FROM __gpkg_part.data ORDER BY rowid",
+                    )
         else:
             if is_spark:
                 row_iter = (tuple(r) for r in df.select(*all_cols).toLocalIterator())

@@ -135,15 +135,6 @@ def choose_level(polys: DataFrame, geom_col: str, grid: CellGrid, sample: int = 
     return _level_for_extents([r[0] for r in rows if r[0] is not None], grid)
 
 
-# Band bounds are widened by this many ulps of the largest coordinate
-# in play (the grid's corners and the polygon's vertices).  That covers
-# the float rounding of the cell encode, which can put a point a few
-# ulps outside its cell's exact bounds, and of the crossing test's
-# x-intercept, which can land a few ulps right of its edge's max x.  A
-# wider margin only adds edges; a narrower one can drop a deciding one.
-_BAND_ULPS = 64
-
-
 def build_cell_index(polys_rows, grid: CellGrid, level: int) -> dict:
     """The CSR cover of (id, WKB) rows at `level`: sorted cell keys,
     and per key a slice members[starts[k]:starts[k+1]] of int32
@@ -160,14 +151,13 @@ def build_cell_index(polys_rows, grid: CellGrid, level: int) -> dict:
     (polygon, cell row) share one list sorted by max x descending, so
     each cell's list is a prefix of it; building it row by row never
     holds more than one row's edge mask.  Bounds are widened by
-    _BAND_ULPS and open on the grid's border rows and columns, where
+    ulp_margin and open on the grid's border rows and columns, where
     cell_xy clamps out-of-domain points."""
     from ..cells.cellid import unpack
-    from ..cells.coverage import cover_geometry
+    from ..cells.coverage import cover_geometry, ulp_margin
 
     nside = 1 << level
     cs = grid.cell_size(level)
-    gmax = max(abs(grid.x0), abs(grid.y0), abs(grid.x0 + grid.span), abs(grid.y0 + grid.span))
     pids, wkbs, envs, preps = [], [], [], []
     cells, owners, lo, hi, band = [], [], [], [], []
     nedge = nband = 0
@@ -178,8 +168,7 @@ def build_cell_index(polys_rows, grid: CellGrid, level: int) -> dict:
         clo = np.zeros(len(cid), dtype=np.int64)
         chi = np.zeros(len(cid), dtype=np.int64)
         if len(cid) and len(pp.x1):
-            coords = np.abs(np.r_[pp.x1, pp.y1])
-            margin = _BAND_ULPS * np.spacing(max(gmax, coords[np.isfinite(coords)].max(initial=0.0)))
+            margin = ulp_margin(grid, np.r_[pp.x1, pp.y1])
             maxx = np.maximum(pp.x1, pp.x2)
             order = np.argsort(-maxx, kind="stable")
             maxx = maxx[order]

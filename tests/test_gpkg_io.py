@@ -272,10 +272,10 @@ def test_distributed_scan_many_partitions(spark, tmp_path):
 
 def test_distributed_scan_types_and_nulls(spark, tmp_path):
     """Declared-type schema mapping under NULLs, booleans, datetimes,
-    and a multi-table union — distributed scan ≡ driver fallback."""
-    import numpy as np
-
+    and a multi-table union: both placements return the same schema
+    and the rows sqlite3 itself returns."""
     from geospark.geom import core as C
+    from geospark.io import gpb
 
     rows = pd.DataFrame(
         {
@@ -292,35 +292,36 @@ def test_distributed_scan_types_and_nulls(spark, tmp_path):
     rows2 = pd.DataFrame({"label": [f"x{i}" for i in range(7)], "k": list(range(7))})
     gpkg.write_gpkg(spark.createDataFrame(rows2), path, "t2", srid=27700)
 
-    dist = gpkg.read_gpkg(spark, path, "t1", rows_per_partition=9)
-    drv_pdf = gpkg._read_table(path, "t1", None, None, False)
-    drv_pdf["table"] = "t1"
-    key = ["stamp", "name", "score", "flag"]
-    a = dist.toPandas().sort_values(key, na_position="first").reset_index(drop=True)
-    b = (
-        spark.createDataFrame(drv_pdf)
-        .toPandas()
-        .sort_values(key, na_position="first")
-        .reset_index(drop=True)
-    )
-    assert set(a.columns) == set(b.columns)
-    for c in a.columns:
-        av, bv = list(a[c]), list(b[c])
-        if c == "geom":
-            av = [None if v is None else bytes(v) for v in av]
-            bv = [None if v is None else bytes(v) for v in bv]
-        assert [x if x == x else None for x in av] == [
-            x if x == x else None for x in bv
-        ], c
+    con = sqlite3.connect(path)
+    want = [
+        (fid, None if g is None else g[gpb.payload_offset(g):], name, score, flag, stamp, 27700, "t1")
+        for fid, g, name, score, flag, stamp in con.execute(
+            "SELECT fid, geom, name, score, flag, stamp FROM t1 ORDER BY fid"
+        )
+    ]
+    con.close()
+    assert len(want) == 40
+    for distributed in (True, False):
+        df = gpkg.read_gpkg(spark, path, "t1", rowids=True, rows_per_partition=9,
+                            distributed=distributed)
+        assert df.dtypes == [
+            ("rowid", "bigint"), ("geom", "binary"), ("name", "string"), ("score", "double"),
+            ("flag", "bigint"), ("stamp", "string"), ("srid", "bigint"), ("table", "string"),
+        ]
+        got = sorted(
+            tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+            for r in df.collect()
+        )
+        assert got == want, distributed
 
     # multi-table union (table=None): all rows, missing cols null
-    both = gpkg.read_gpkg(spark, path, rows_per_partition=9)
-    pdf = both.toPandas()
-    assert set(pdf["table"]) == {"t1", "t2"}
-    assert len(pdf) == 47
-    t2rows = pdf[pdf["table"] == "t2"]
-    assert t2rows["name"].isna().all()
-    assert sorted(t2rows["label"]) == [f"x{i}" for i in range(7)]
+    for distributed in (True, False):
+        pdf = gpkg.read_gpkg(spark, path, rows_per_partition=9, distributed=distributed).toPandas()
+        assert set(pdf["table"]) == {"t1", "t2"}
+        assert len(pdf) == 47
+        t2rows = pdf[pdf["table"] == "t2"]
+        assert t2rows["name"].isna().all()
+        assert sorted(t2rows["label"]) == [f"x{i}" for i in range(7)]
 
 
 def test_distributed_scan_column_projection(spark, tmp_path):
@@ -373,8 +374,9 @@ def test_gpb_payload_offset_rejects_extended_and_garbage():
 
 
 def test_driver_fallback_bigint_with_nulls_exact(spark, tmp_path):
-    """Review r5 pass 3: the driver fallback (the documented remedy
-    path) must not round >2^53 ints when the column has NULLs."""
+    """Review r5 pass 3: the driver-side placement (the default on a
+    non-local master) must not round >2^53 ints when the column has
+    NULLs."""
     import sqlite3
 
     big = 2**53 + 1
@@ -484,8 +486,8 @@ def test_empty_and_foreign_file_edges(spark, tmp_path):
 
 def test_driver_fallback_geom_name_collision(spark, tmp_path):
     """Review r5 pass 3: geometry column named 'shape' plus a real
-    attribute named 'geom' — the driver fallback must not produce
-    duplicate columns; the geometry wins deterministically."""
+    attribute named 'geom' — no duplicate columns on either placement;
+    the geometry wins deterministically."""
     import sqlite3
 
     from geospark.io import gpb
@@ -505,8 +507,91 @@ def test_driver_fallback_geom_name_collision(spark, tmp_path):
     con.execute("INSERT INTO t (shape, geom) VALUES (?, ?)", (blob, "decoy"))
     con.commit()
     con.close()
-    assert gpkg._table_plan(p, "t", None, None, False) is None  # routes to fallback
-    got = gpkg.read_gpkg(spark, p, "t").collect()
-    assert len(got) == 1
-    g = gc.from_wkb(bytes(got[0]["geom"]))
-    assert (g.parts[0][0], g.parts[0][1]) == (1.0, 2.0)
+    for distributed in (True, False):
+        df = gpkg.read_gpkg(spark, p, "t", distributed=distributed)
+        assert df.columns == ["geom", "srid", "table"]
+        got = df.collect()
+        assert len(got) == 1
+        g = gc.from_wkb(bytes(got[0]["geom"]))
+        assert (g.parts[0][0], g.parts[0][1]) == (1.0, 2.0)
+
+
+def test_declared_type_policy_both_placements(spark, tmp_path):
+    """Every declared type maps to one Spark type: NUMERIC and
+    DECIMAL(10,2) to double, MEDIUMINT to bigint, an unregistered
+    POINT or GEOMETRY column and an undeclared column to binary.  An
+    integer converts to double only when exact (|v| <= 2^53); beyond
+    that the read raises.  Empty tables and empty bbox windows keep
+    the same schema.  Both placements agree throughout."""
+    from geospark.geom import core as gc
+    from geospark.io import gpb
+
+    blob = gpb.encode(gc.from_wkt("POINT (1 2)"), 4326)
+    p = str(tmp_path / "decl.gpkg")
+    con = sqlite3.connect(p)
+    gpkg._bootstrap(con)
+    for t in ("t", "e"):
+        con.execute(
+            f"CREATE TABLE {t} (fid INTEGER PRIMARY KEY, n NUMERIC, d DECIMAL(10,2), "
+            "m MEDIUMINT, pt POINT, gg GEOMETRY, u)"
+        )
+        con.execute(
+            "INSERT INTO gpkg_contents (table_name, data_type, identifier) VALUES (?,'attributes',?)",
+            (t, t),
+        )
+    con.executemany(
+        "INSERT INTO t (n, d, m, pt, gg, u) VALUES (?, ?, ?, ?, ?, ?)",
+        [
+            (1, 12.00, 7, blob, None, b"\x01\x02"),  # 12.00 is stored as INTEGER 12
+            (2.5, 3.25, None, None, blob, None),
+            (None, None, -(2**40), blob, blob, b""),
+            (2**53, -(2**53), 0, None, None, None),
+        ],
+    )
+    con.commit()
+    con.close()
+    schema = [
+        ("n", "double"), ("d", "double"), ("m", "bigint"), ("pt", "binary"),
+        ("gg", "binary"), ("u", "binary"), ("table", "string"),
+    ]
+    want = [
+        (1.0, 12.0, 7, blob, None, b"\x01\x02", "t"),
+        (2.5, 3.25, None, None, blob, None, "t"),
+        (None, None, -(2**40), blob, blob, b"", "t"),
+        (float(2**53), float(-(2**53)), 0, None, None, None, "t"),
+    ]
+
+    def rows(df):
+        return [tuple(bytes(v) if isinstance(v, bytearray) else v for v in r) for r in df.collect()]
+
+    for distributed in (True, False):
+        df = gpkg.read_gpkg(spark, p, "t", distributed=distributed)
+        assert df.dtypes == schema, distributed
+        assert rows(df) == want, distributed
+        empty = gpkg.read_gpkg(spark, p, "e", distributed=distributed)
+        assert empty.dtypes == schema
+        assert empty.count() == 0
+
+    # one integer beyond 2^53 in a NUMERIC column has no exact double
+    con = sqlite3.connect(p)
+    con.execute("INSERT INTO t (n) VALUES (?)", (2**53 + 1,))
+    con.commit()
+    con.close()
+    for distributed in (True, False):
+        with pytest.raises(Exception, match="no exact double"):
+            gpkg.read_gpkg(spark, p, "t", distributed=distributed).collect()
+
+    # an empty bbox window has the full read's schema on both placements
+    sp = str(tmp_path / "spatial.gpkg")
+    gpkg.write_gpkg(
+        spark.createDataFrame([(gc.to_wkb(gc.from_wkt("POINT (1 2)")), 1.5, 3)],
+                              "geom binary, x double, k bigint"),
+        sp, "s", srid=27700, add_spatial_index=True,
+    )
+    full = gpkg.read_gpkg(spark, sp, "s").dtypes
+    assert full == [("geom", "binary"), ("x", "double"), ("k", "bigint"),
+                    ("srid", "bigint"), ("table", "string")]
+    for distributed in (True, False):
+        win = gpkg.read_gpkg(spark, sp, "s", bbox=(1e6, 1e6, 2e6, 2e6), distributed=distributed)
+        assert win.dtypes == full
+        assert win.count() == 0

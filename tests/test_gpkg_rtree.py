@@ -57,7 +57,7 @@ def _expected_rtree(path, table="t", col="geom"):
         con.close()
 
 
-@pytest.mark.parametrize("mode", ["merge", "stream", "driver"])
+@pytest.mark.parametrize("mode", ["merge", "stream"])
 def test_rtree_bulk_load_matches_blobs(spark, tmp_path, mode):
     p = str(tmp_path / f"rt_{mode}.gpkg")
     gpkg.write_gpkg(_pts_df(spark), p, "t", srid=27700, sink_mode=mode,
@@ -186,7 +186,7 @@ def test_bbox_read_indexed_and_unindexed_match_bruteforce(spark, tmp_path):
                                     rows_per_partition=200).collect()
         }
         assert got == want, p
-    # driver-side fallback path agrees too
+    # the driver-side placement agrees too
     got_drv = {
         r["rowid"]
         for r in gpkg.read_gpkg(spark, p_idx, "t", rowids=True, bbox=bbox,

@@ -1,12 +1,15 @@
 """The one point-in-polygon kernel, gpred.locate_pairs, against the
 oracle PreparedPolygon.locate_batch: over the cell-banded edge lists of
 build_cell_index (the flagship's path), and end to end through the
-flagship and pip_join on a polygon of more than 10,000 vertices."""
+flagship and pip_join on a polygon of more than 10,000 vertices.  Also
+the cell cover those paths probe: every point the oracle puts inside or
+on a polygon must encode to a cell of the polygon's cover."""
 
 import numpy as np
 import pandas as pd
 
 from geospark.cells.cellid import DEFAULT_GRID
+from geospark.cells.coverage import cover_geometry
 from geospark.geom import core as gc
 from geospark.geom.predicates import EXTERIOR, PreparedPolygon, locate_pairs
 from geospark.ops.flagship import _candidate_pairs
@@ -227,3 +230,75 @@ def test_large_polygon_flagship_and_pip_join(spark):
         pts = spark.createDataFrame(pd.DataFrame({"point_id": sel, "x": px[sel], "y": py[sel]}))
         pj = pip_join(pts, polys, level=LEVEL).toPandas()
         assert set(zip(pj["point_id"], pj["poly_id"])) == want
+
+
+def _ulp_edge_polygons():
+    """Rectangles with one edge one or two ulps either side of a cell
+    boundary, each spanning three cells along that edge, so the middle
+    cell holds no vertex and only the edge test can bring it into the
+    cover.  Points on a right or top edge just below a boundary round
+    up into the next cell (x - x0 has a coarser ulp than x)."""
+    offsets = (down, lambda v: down(down(v)), up, lambda v: up(up(v)))
+    polys = []
+    for k, f in enumerate(offsets):
+        c = 1500 + 8 * k  # columns and rows away from the other shapes
+        X, Y = f(bx(c)), f(by(c))
+        lo, hi = by(c) + 50, by(c + 3) - 50  # three rows
+        polys.append(gc.polygon(box(X - 3000, lo, X, hi)))  # right edge at X
+        polys.append(gc.polygon(box(X, lo, X + 3000, hi)))  # left edge at X
+        lo, hi = bx(c) + 50, bx(c + 3) - 50  # three columns
+        polys.append(gc.polygon(box(lo, Y - 3000, hi, Y)))  # top edge at Y
+        polys.append(gc.polygon(box(lo, Y, hi, Y + 3000)))  # bottom edge at Y
+    return [(i, gc.to_wkb(g)) for i, g in enumerate(polys)]
+
+
+def _located_pairs(rows, px, py):
+    """{(point, polygon)} that locate_batch puts inside or on."""
+    out = set()
+    for pid, wkb in rows:
+        loc = PreparedPolygon(gc.from_wkb(wkb)).locate_batch(px, py)
+        out |= {(int(i), pid) for i in np.flatnonzero(loc != EXTERIOR)}
+    return out
+
+
+def test_cover_holds_every_located_point():
+    # a polygon left of the domain over six rows: its points clamp into
+    # column 0, where only the rows holding a vertex have one
+    outside = gc.polygon(box(GRID.x0 - 9000, by(400) + 10, GRID.x0 - 5000, by(405) + 10))
+    rows = _ulp_edge_polygons() + _polygons() + [(99, gc.to_wkb(outside))]
+    px, py = _probe_points(rows, np.random.RandomState(8))
+    cells = GRID.encode_points(px, py, LEVEL)
+    checked = 0
+    for pid, wkb in rows:
+        g = gc.from_wkb(wkb)
+        inside = PreparedPolygon(g).locate_batch(px, py) != EXTERIOR
+        missing = ~np.isin(cells[inside], cover_geometry(g, GRID, LEVEL))
+        assert not missing.any(), (pid, px[inside][missing][:3], py[inside][missing][:3])
+        checked += int(inside.sum())
+    assert checked > 10_000
+
+
+def test_cover_through_pip_join_and_flagship(spark):
+    from geospark.ops.flagship import geocode_pip_tile
+    from geospark.ops.joins import pip_join
+
+    rows = _ulp_edge_polygons()
+    px, py = _probe_points(rows, np.random.RandomState(9))
+    ok = np.isfinite(px) & np.isfinite(py)
+    px, py = px[ok], py[ok]
+    want = _located_pairs(rows, px, py)
+    assert len(want) > 1000
+    polys = spark.createDataFrame(pd.DataFrame({
+        "poly_id": [pid for pid, _ in rows], "geom": [wkb for _, wkb in rows],
+    }))
+    pts = spark.createDataFrame(pd.DataFrame({"point_id": np.arange(len(px)), "x": px, "y": py}))
+    pj = pip_join(pts, polys, level=LEVEL).toPandas()
+    assert set(zip(pj["point_id"], pj["poly_id"])) == want
+    # repr() round-trips the float, so the flagship parses the same point
+    pages = spark.createDataFrame(pd.DataFrame({
+        "page_id": np.arange(len(px)),
+        "url": [f"https://p{i}.example.org/" for i in range(len(px))],
+        "html": [f"<p>geo:{float(x)!r},{float(y)!r}</p>".encode() for x, y in zip(px, py)],
+    }))
+    fl = geocode_pip_tile(pages, polys, level=LEVEL, tile_level=14).toPandas()
+    assert set(zip(fl["page_id"], fl["poly_id"])) == want

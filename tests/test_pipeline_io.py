@@ -319,8 +319,8 @@ def test_geojson_staged_dir_cache_and_bound(spark, tmp_path):
 
 def test_gpkg_scan_column_name_collision_falls_back(spark, tmp_path):
     """ADVICE r4: a source column named table/srid (or a non-geometry
-    geom) collides with the distributed scan's synthesized columns —
-    the plan must return None so the driver-side read handles it."""
+    geom) collides with the scan's synthesized columns — the
+    synthesized column wins, on both placements."""
     import sqlite3
 
     from geospark.io import gpkg
@@ -333,9 +333,11 @@ def test_gpkg_scan_column_name_collision_falls_back(spark, tmp_path):
     con.executemany('INSERT INTO t ("table", v) VALUES (?, ?)', [("x", 1), ("y", 2)])
     con.commit()
     con.close()
-    assert gpkg._table_plan(p, "t", None, None, False) is None
-    got = gpkg.read_gpkg(spark, "%s" % p, "t").toPandas()
-    assert sorted(got["v"]) == [1, 2]
+    for distributed in (True, False):
+        got = gpkg.read_gpkg(spark, p, "t", distributed=distributed).toPandas()
+        assert list(got.columns) == ["v", "table"]
+        assert sorted(got["v"]) == [1, 2]
+        assert set(got["table"]) == {"t"}
 
 
 def test_gpkg_scan_affinity_mismatch(spark, tmp_path):
