@@ -1,26 +1,31 @@
 """Distributed spatial joins — the engine's centerpiece.
 
-Strategy (SURVEY.md §3.2 / §4.2): two-phase filter-refine re-expressed
-as a cell-key equi-join + vectorized refine:
+Strategy (SURVEY.md §3.2 / §4.2): two-phase filter-refine against a
+cell fabric.  The build side (polygons) is covered with exact cells at
+a level chosen from the polygon size distribution; each probe point
+falls in one cell of that level.  Two physical plans, picked by the
+build side's size estimate:
 
-  build side (polygons)  → explode exact covering cells at a level
-                           chosen from the polygon size distribution
-  probe side (points)    → one cell per point (same level)
-  candidate pairs        → plain Catalyst equi-join on `cell`
-                           (broadcast when the build side is small,
-                           AQE-managed shuffle otherwise)
-  refine                 → mapInPandas: decode each polygon once per
-                           executor (LRU cache), vectorized
-                           point-in-polygon over the whole Arrow batch
+  broadcast  the dimension's CSR index (cell → polygons, and per entry
+             the cell's band of edges — the cell-local edge lists of
+             Raster Intervals, SIGMOD 2023) ships once per executor;
+             ONE mapInArrow over the probe gathers candidates with a
+             searchsorted and refines them in one banded
+             point-in-polygon call per batch.  No Catalyst join.
+  shuffle    a Catalyst cell equi-join whose candidate rows carry each
+             polygon's WKB, then a mapInPandas refine against full
+             edge lists (decode once per executor, LRU cache).
 
 This mirrors the reference's R-tree probe + PreparedGeometry refine
-(index.clj:124-160) with the tree replaced by the cell fabric and the
-prepared-geometry cache replaced by an executor-level polygon cache.
+(index.clj:124-160) with the tree replaced by the cell fabric.  Both
+plans run PreparedPolygon's exact ray-crossing arithmetic
+(gpred.locate_pairs), so their answers equal locate_batch's.
 
-Skew (north rule: dense urban cells): optional salting fans hot cells
-out across `salt` partitions — build rows replicate per salt value,
-probe rows pick one deterministically.  AQE's skew-join handles the
-shuffle-size half of the problem; salting spreads the refine CPU.
+Skew (north rule: dense urban cells): optional salting fans the
+shuffle plan's hot cells out across `salt` partitions — build rows
+replicate per salt value, probe rows pick one deterministically.  AQE's
+skew-join handles the shuffle-size half of the problem; salting spreads
+the refine CPU.
 """
 
 from __future__ import annotations
@@ -30,7 +35,9 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..cells.cellid import DEFAULT_GRID, CellGrid
@@ -52,10 +59,11 @@ _PRED_FNS = {
 _PREP_CACHE: dict = {}
 _PREP_CACHE_MAX = 4096
 
-# build-side size gate: above this estimate the broadcast-dict plan
-# (driver collect + sc.broadcast) is refused and the shuffle cell-join
-# runs instead — an unbounded collect() OOMs the driver long before
-# any task starts (SURVEY §4.2: selection by size estimate, then AQE)
+# build-side size gate: above this estimate the broadcast plan (driver
+# collect + CSR index + sc.broadcast) is refused and the shuffle
+# cell-join runs instead — an unbounded collect() OOMs the driver long
+# before any task starts (SURVEY §4.2: selection by size estimate, then
+# AQE)
 BROADCAST_MAX_BYTES = 256 << 20
 
 
@@ -261,7 +269,7 @@ class _Dimension:
             self.level = choose_level(polys, poly_geom, grid)
             self.build_bytes = estimate_build_bytes(polys, poly_geom)
         self.covers: dict = {}  # level -> (index, broadcast)
-        self.frames: dict = {}  # (level, with_wkb) -> build DataFrame
+        self.frames: dict = {}  # level -> shuffle-plan build DataFrame
 
     def collected(self, polys) -> list:
         """Every (id, WKB) row with a geometry, collected once."""
@@ -282,23 +290,23 @@ class _Dimension:
             c = self.covers[level] = (index, polys.sparkSession.sparkContext.broadcast(index))
         return c
 
-    def build_frame(self, polys, level: int, with_wkb: bool) -> DataFrame:
-        """The cover as a (__cell, __pid[, __pwkb]) DataFrame: a local
+    def build_frame(self, polys, level: int) -> DataFrame:
+        """The cover as a (__cell, __pid, __pwkb) DataFrame: a local
         relation with exact statistics, so the planner sees its size."""
-        key = (level, with_wkb)
-        if key not in self.frames:
+        if level not in self.frames:
             index, _ = self.cover(polys, level)
             members = index["members"]
             cols = {
                 "__cell": np.repeat(index["cell_keys"], np.diff(index["starts"])),
                 "__pid": index["pids"][members],
+                "__pwkb": [index["wkbs"][m] for m in members],
             }
-            schema = f"__cell long, __pid {polys.schema[self.key[0]].dataType.simpleString()}"
-            if with_wkb:
-                cols["__pwkb"] = [index["wkbs"][m] for m in members]
-                schema += ", __pwkb binary"
-            self.frames[key] = polys.sparkSession.createDataFrame(pd.DataFrame(cols), schema)
-        return self.frames[key]
+            schema = (
+                f"__cell long, __pid {polys.schema[self.key[0]].dataType.simpleString()}, "
+                "__pwkb binary"
+            )
+            self.frames[level] = polys.sparkSession.createDataFrame(pd.DataFrame(cols), schema)
+        return self.frames[level]
 
 
 def _release(per_df: dict) -> None:
@@ -331,6 +339,30 @@ def dimension(polys: DataFrame, poly_id: str, poly_geom: str, grid: CellGrid) ->
     return per_df[key]
 
 
+def _candidate_pairs(pcells, keys, starts):
+    """(CSR entry, probe) index pairs: each probe cell found in the
+    index, once per entry of that cell — one searchsorted, no loop."""
+    if not len(keys):
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    pos = np.minimum(np.searchsorted(keys, pcells), len(keys) - 1)
+    pt = np.flatnonzero(keys[pos] == pcells)
+    first = starts[pos[pt]]
+    cnt = starts[pos[pt] + 1] - first
+    entry = np.repeat(first - (np.cumsum(cnt) - cnt), cnt) + np.arange(int(cnt.sum()))
+    return entry, np.repeat(pt, cnt)
+
+
+# point location classes each point predicate keeps (index.clj:145-160
+# refine modes): intersects/covers(poly, pt) → loc != EXTERIOR;
+# contains → strict interior; touches → boundary
+_WANTED = {
+    "intersects": (gpred.BOUNDARY, gpred.INTERIOR),
+    "covers": (gpred.BOUNDARY, gpred.INTERIOR),
+    "contains": (gpred.INTERIOR,),
+    "touches": (gpred.BOUNDARY,),
+}
+
+
 def pip_join(
     points: DataFrame,
     polys: DataFrame,
@@ -345,35 +377,31 @@ def pip_join(
     broadcast: Optional[bool] = None,
     salt: int = 0,
     keep_cols: Optional[list] = None,
-    cell_col: Optional[str] = None,
     tile_level: Optional[int] = None,
-    tile_grid: Optional[CellGrid] = None,
-    broadcast_threshold: int = BROADCAST_MAX_BYTES,
 ) -> DataFrame:
-    """Point-in-polygon (or other predicate) join.
+    """Point-in-polygon (or other point predicate) join.
 
     points: (point_id, x, y, ...); polys: (poly_id, geom WKB, ...).
-    Returns (point_id, poly_id [, *keep_cols]) candidate-exact pairs —
+    Returns (point_id, poly_id [, *keep_cols][, cell_id]) exact pairs —
     keep_cols are probe-side columns carried through the join so the
-    caller doesn't need a second pass over the (expensive) probe input.
+    caller doesn't need a second pass over the (expensive) probe input;
+    tile_level adds each hit's Z-order `cell_id` at that level.
+    Points with a NULL or NaN coordinate match nothing.
 
-    For point probes every predicate reduces to a point-location test:
-    intersects/covers(poly,pt) → loc != EXTERIOR; contains → strict
-    interior; touches → boundary (index.clj:145-160 refine modes).
-
-    broadcast: None picks by the build side's size estimate.  True
-    ships each polygon once per executor in a broadcast map and hints
-    a broadcast join.  False selects the cell-join plan WITHOUT the
-    broadcast polygon map (each candidate row carries its WKB); the
-    join strategy is then Spark's, and Spark/AQE may still broadcast a
-    small build side (500 districts: shuffle write ≈ 0).
-
-    cell_col: a pre-computed probe cell column at exactly `level` —
-    lets the caller fuse the cell encode into an upstream python
-    stage (one fewer JVM↔Python hop).
-    tile_level: fuse Z-order tile assignment into the refine stage —
-    output gains a `cell_id` column with no extra python stage.
+    broadcast: None picks by the build side's size estimate against
+    BROADCAST_MAX_BYTES.  True runs the broadcast plan: the dimension's
+    cached CSR index ships once per executor and the probe runs ONE
+    mapInArrow kernel (cell encode, candidate gather, banded
+    point-in-polygon, tile encode) with no Catalyst join.  False runs
+    the shuffle plan: a cell equi-join whose candidate rows carry each
+    polygon's WKB, refined against full edge lists; Spark/AQE may
+    still broadcast a small build side.  salt > 1 fans the shuffle
+    plan's hot cells out over `salt` partitions; the broadcast plan has
+    no join to salt.
     """
+    wanted = _WANTED.get(predicate)
+    if wanted is None:
+        raise ValueError(f"unsupported point predicate {predicate}")
     dim = dimension(polys, poly_id, poly_geom, grid)
     if level is None:
         level = dim.level
@@ -381,50 +409,44 @@ def pip_join(
         # size-gate the collect-based plan ONLY for the default: an
         # explicit True from a caller who knows the build side is small
         # is honored; explicit False keeps the cell-join
-        broadcast = dim.build_bytes <= broadcast_threshold
+        broadcast = dim.build_bytes <= BROADCAST_MAX_BYTES
+    keep_cols = [c for c in (keep_cols or []) if c not in (point_id,)]
+    from ..cells.cellexpr import cell_id_expr, sql_col
+
+    if broadcast:
+        # SQL text, not Column objects: one JVM call for the whole
+        # projection instead of several per column — a driver cost paid
+        # on every call (measured ~10 ms of a ~1 s flagship round)
+        probe = points.selectExpr(
+            sql_col(point_id),
+            f"CAST({sql_col(x_col)} AS DOUBLE) AS __x",
+            f"CAST({sql_col(y_col)} AS DOUBLE) AS __y",
+            *map(sql_col, keep_cols),
+        )
+        return _pip_join_broadcast(
+            probe, polys.schema[poly_id].dataType, wanted, grid, tile_level,
+            dim.cover(polys, level)[1],
+        )
 
     if dim.small:
         # the cached driver-side cover (same cover_geometry cells as
         # the cover_cells UDF) — no python stage on the build side
-        build = dim.build_frame(polys, level, with_wkb=not broadcast)
+        build = dim.build_frame(polys, level)
     else:
         build = polys.select(
             F.col(poly_id).alias("__pid"),
             F.col(poly_geom).alias("__pwkb"),
             F.explode(cover_cells(level, grid)(F.col(poly_geom))).alias("__cell"),
         )
-    poly_bc = None
-    if broadcast:
-        # ship each polygon ONCE per executor — carrying WKB through
-        # the join would duplicate it per candidate row (measured 4×
-        # refine slowdown from Arrow bytes).  Small dimensions reuse
-        # the cached cover's broadcast; large ones skip the driver-side
-        # cover and broadcast just the collected rows.
-        if dim.small:
-            poly_bc = dim.cover(polys, level)[1]
-        else:
-            rows = dim.collected(polys)
-            poly_bc = points.sparkSession.sparkContext.broadcast(
-                {"pids": [p for p, _ in rows], "wkbs": [w for _, w in rows]}
-            )
-        build = build.drop("__pwkb")
-    keep_cols = [c for c in (keep_cols or []) if c not in (point_id,)]
     # probe-side cell assignment is PURE CATALYST (cellexpr is
     # property-tested bit-identical to the numpy encoder): the probe
     # is the big side, and a pandas UDF here would put every point
     # through the python socket before the join even starts
-    from ..cells.cellexpr import cell_id_expr, sql_col
-
-    cell_expr = (
-        F.col(cell_col)
-        if cell_col is not None
-        else cell_id_expr(sql_col(x_col), sql_col(y_col), level, grid)
-    )
     probe = points.select(
         F.col(point_id).alias("__qid"),
         F.col(x_col).alias("__x"),
         F.col(y_col).alias("__y"),
-        cell_expr.alias("__cell"),
+        cell_id_expr(sql_col(x_col), sql_col(y_col), level, grid).alias("__cell"),
         *[F.col(c) for c in keep_cols],
     )
     if salt > 1:
@@ -435,9 +457,6 @@ def pip_join(
         on = ["__cell", "__salt"]
     else:
         on = ["__cell"]
-
-    if broadcast is True:
-        build = F.broadcast(build)
     cand = probe.join(build, on=on, how="inner")
 
     out_fields = [
@@ -445,23 +464,10 @@ def pip_join(
         StructField("poly_id", cand.schema["__pid"].dataType),
     ] + [StructField(c, cand.schema[c].dataType) for c in keep_cols]
     if tile_level is not None:
-        from pyspark.sql.types import LongType
-
         out_fields.append(StructField("cell_id", LongType()))
-        tgrid = tile_grid or grid
     out_schema = StructType(out_fields)
 
-    if predicate in ("intersects", "covers"):
-        wanted = (gpred.BOUNDARY, gpred.INTERIOR)
-    elif predicate == "contains":
-        wanted = (gpred.INTERIOR,)
-    elif predicate == "touches":
-        wanted = (gpred.BOUNDARY,)
-    else:
-        raise ValueError(f"unsupported point predicate {predicate}")
-
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        wkb_of = None
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -471,13 +477,7 @@ def pip_join(
             px = pdf["__x"].to_numpy(np.float64)
             py = pdf["__y"].to_numpy(np.float64)
             upid, first, slot = np.unique(pid, return_index=True, return_inverse=True)
-            if poly_bc is not None:
-                if wkb_of is None:
-                    v = poly_bc.value
-                    wkb_of = dict(zip(v["pids"], v["wkbs"]))
-                wkbs = [wkb_of[p] for p in upid]
-            else:
-                wkbs = pdf["__pwkb"].to_numpy()[first]
+            wkbs = pdf["__pwkb"].to_numpy()[first]
             pps = [_prepared(("pip", p), w) for p, w in zip(upid, wkbs)]
             eoff = np.cumsum([0] + [len(pp.x1) for pp in pps])
             loc = gpred.locate_pairs(
@@ -492,10 +492,83 @@ def pip_join(
                 for c in keep_cols:
                     out[c] = pdf[c].to_numpy()[keep]
                 if tile_level is not None:
-                    out["cell_id"] = tgrid.encode_points(px[keep], py[keep], tile_level)
+                    out["cell_id"] = grid.encode_points(px[keep], py[keep], tile_level)
                 yield pd.DataFrame(out)
 
     return cand.mapInPandas(refine, schema=out_schema)
+
+
+def _pip_join_broadcast(probe, poly_type, wanted, grid, tile_level, bc) -> DataFrame:
+    """The broadcast plan: probe (id, x, y, *keep) → one mapInArrow
+    against bc, a cached CSR index from build_cell_index.  Per coalesced
+    batch: one cell encode, one candidate gather, ONE banded
+    gpred.locate_pairs call over every (candidate, edge) row — each
+    candidate reads only its cell's edge band, not its polygon's full
+    ring — and one tile encode over the hits."""
+    fields = probe.schema.fields
+    out_schema = StructType(
+        [StructField("point_id", fields[0].dataType), StructField("poly_id", poly_type)]
+        + [StructField(f.name, f.dataType) for f in fields[3:]]
+        + ([StructField("cell_id", LongType())] if tile_level is not None else [])
+    )
+    arrow_schema = pa.schema([pa.field(f.name, to_arrow_type(f.dataType)) for f in out_schema.fields])
+    keep = range(3, len(fields))
+
+    # Kernel I/O shape (round 6, measured at 160M pages): mapInArrow
+    # instead of mapInPandas skips the pandas conversion on both sides
+    # (19.3s → 18.1s), and coalescing input record batches to ~1M rows
+    # amortizes the per-batch calls (18.1s → 15.6s when measured via
+    # maxRecordsPerBatch=1M; the kernel-side coalesce gets the same
+    # effect without raising the session-wide batch cap, which would
+    # quadruple the text kernels' per-batch memory).
+    target_rows = 1 << 20
+
+    def run(rbatches):
+        idx = bc.value
+        keys, starts, members = idx["cell_keys"], idx["starts"], idx["members"]
+        edges = idx["ex1"], idx["ey1"], idx["ex2"], idx["ey2"]
+
+        def process(rbs):
+            t = pa.Table.from_batches(rbs)
+            px = t.column(1).to_numpy()
+            py = t.column(2).to_numpy()
+            # NULL coordinates arrive as NaN here
+            ok = np.flatnonzero(~(np.isnan(px) | np.isnan(py)))
+            px, py = px[ok], py[ok]
+            entry, pt = _candidate_pairs(grid.encode_points(px, py, idx["level"]), keys, starts)
+            poly = members[entry]
+            loc = gpred.locate_pairs(
+                px[pt], py[pt], idx["ebox"][poly],
+                idx["band_lo"][entry], idx["band_hi"][entry], *edges, idx["band"],
+            )
+            hit = np.isin(loc, wanted)
+            pt, poly = pt[hit], poly[hit]
+            if not len(pt):
+                return None
+            rows = pa.array(ok[pt])
+            cols = [t.column(0).take(rows).combine_chunks(), pa.array(idx["pids"][poly])]
+            cols += [t.column(i).take(rows).combine_chunks() for i in keep]
+            if tile_level is not None:
+                cols.append(pa.array(grid.encode_points(px[pt], py[pt], tile_level)))
+            cols = [c if c.type == f.type else c.cast(f.type) for c, f in zip(cols, arrow_schema)]
+            return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+        buf, nbuf = [], 0
+        for rb in rbatches:
+            if rb.num_rows:
+                buf.append(rb)
+                nbuf += rb.num_rows
+            if nbuf >= target_rows:
+                out = process(buf)
+                buf, nbuf = [], 0
+                if out is not None:
+                    yield out
+        if buf:
+            out = process(buf)
+            if out is not None:
+                yield out
+
+    return probe.mapInArrow(run, schema=out_schema)
 
 
 def predicate_join(
@@ -509,7 +582,6 @@ def predicate_join(
     level: Optional[int] = None,
     grid: CellGrid = DEFAULT_GRID,
     broadcast: Optional[bool] = None,
-    broadcast_threshold: int = BROADCAST_MAX_BYTES,
 ) -> DataFrame:
     """General geometry×geometry predicate join (both sides WKB).
 
@@ -532,7 +604,7 @@ def predicate_join(
         level = dim.level
     if broadcast is None:
         # gate only the default; explicit True/False is the caller's call
-        broadcast = dim.build_bytes <= broadcast_threshold
+        broadcast = dim.build_bytes <= BROADCAST_MAX_BYTES
     if broadcast:
         return _predicate_join_broadcast(
             left, left_id, left_geom, right.schema[right_id].dataType,
@@ -698,23 +770,9 @@ def _predicate_join_broadcast(
             row = np.repeat(np.arange(nrows, dtype=np.int64), cnt)
             j = np.arange(total, dtype=np.int64) - np.repeat(cum - cnt, cnt)
             cells = pack(ix0[row] + j // ny[row], iy0[row] + j % ny[row], level).view(np.int64)
-            # batched index lookup: searchsorted + equality mask
-            pos = np.searchsorted(keys, cells)
-            pos = np.minimum(pos, len(keys) - 1)
-            hit = keys[pos] == cells
-            hrow, hpos = row[hit], pos[hit]
-            # expand each hit cell's member slice → flat (row, member)
-            mcnt = starts_[hpos + 1] - starts_[hpos]
-            mtotal = int(mcnt.sum())
-            if mtotal == 0:
-                continue
-            mrow = np.repeat(hrow, mcnt)
-            moff = np.arange(mtotal, dtype=np.int64) - np.repeat(
-                np.cumsum(mcnt) - mcnt, mcnt
-            )
-            midx = members_[np.repeat(starts_[hpos], mcnt) + moff].astype(np.int64)
+            entry, k = _candidate_pairs(cells, keys, starts_)
             # dedupe (row, member) pairs from multi-cell hits
-            pairkey = mrow * np.int64(len(pids_)) + midx
+            pairkey = row[k] * np.int64(len(pids_)) + members_[entry]
             uniq = np.unique(pairkey)
             urow = (uniq // len(pids_)).astype(np.int64)
             umem = (uniq % len(pids_)).astype(np.int64)

@@ -69,8 +69,8 @@ def nation_boxes(spark, sf_dir) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def q_pip_join(spark, sf_dir) -> DataFrame:
-    """Point-in-polygon join through the full cell-join engine path
-    (cover cells → equi-join → prepared-PIP refine)."""
+    """Point-in-polygon join through pip_join's broadcast plan (cached
+    CSR cell index → one banded point-in-polygon kernel per batch)."""
     from .ops.joins import pip_join
 
     pts = customer_points(spark, sf_dir)

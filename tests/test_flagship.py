@@ -21,12 +21,10 @@ def test_fused_matches_composable(spark):
         pages, districts, level=level, tile_level=14
     ).toPandas()
 
-    geo = geocode_pages(pages, cell_level=level).where("kind=1").select(
-        "page_id", "x", "y", "cell"
-    )
+    geo = geocode_pages(pages).where("kind=1").select("page_id", "x", "y")
     comp = pip_join(
         geo, districts, point_id="page_id", x_col="x", y_col="y",
-        broadcast=True, level=level, cell_col="cell", tile_level=14,
+        broadcast=True, level=level, tile_level=14,
     ).toPandas()
 
     a = set(map(tuple, fused[["page_id", "poly_id", "cell_id"]].values.tolist()))

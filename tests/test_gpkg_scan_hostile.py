@@ -93,9 +93,21 @@ def test_large_blob_rows_bounded_tasks(spark, tmp_path):
         F.sum((F.length("payload") == F.col("n")).cast("int")).alias("ok"),
     ).collect()[0]
     assert (row["c"], row["bytes"], row["ok"]) == (32, total, 32)
-    # ranges honored rows_per_partition: >= 8 tasks of <= 4 rows
+    # ranges honored rows_per_partition: >= 8 tasks of <= 4 rows each,
+    # together covering every rowid exactly once
     ranges = gpkg._rowid_ranges(p, "t", 4)
-    assert len(ranges) >= 8 and all(hi - lo + 1 <= 4 or True for lo, hi in ranges)
+    con = sqlite3.connect(p)
+    try:
+        rowids = [r[0] for r in con.execute("SELECT rowid FROM t ORDER BY rowid")]
+        counts = [
+            con.execute("SELECT count(*) FROM t WHERE rowid BETWEEN ? AND ?", rng).fetchone()[0]
+            for rng in ranges
+        ]
+    finally:
+        con.close()
+    assert len(ranges) >= 8 and all(c <= 4 for c in counts), (ranges, counts)
+    covered = sorted(r for r in rowids for lo, hi in ranges if lo <= r <= hi)
+    assert covered == rowids, ranges
 
 
 def test_concurrent_writer_snapshot_read(spark, tmp_path):

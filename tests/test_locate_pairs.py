@@ -1,7 +1,8 @@
 """The one point-in-polygon kernel, gpred.locate_pairs, against the
 oracle PreparedPolygon.locate_batch: over the cell-banded edge lists of
-build_cell_index (the flagship's path), and end to end through the
-flagship and pip_join on a polygon of more than 10,000 vertices.  Also
+build_cell_index (pip_join's broadcast plan, which the flagship runs),
+and end to end through the flagship and pip_join on a polygon of more
+than 10,000 vertices.  Also
 the cell cover those paths probe: every point the oracle puts inside or
 on a polygon must encode to a cell of the polygon's cover."""
 
@@ -12,8 +13,7 @@ from geospark.cells.cellid import DEFAULT_GRID
 from geospark.cells.coverage import cover_geometry
 from geospark.geom import core as gc
 from geospark.geom.predicates import EXTERIOR, PreparedPolygon, locate_pairs
-from geospark.ops.flagship import _candidate_pairs
-from geospark.ops.joins import build_cell_index
+from geospark.ops.joins import _candidate_pairs, build_cell_index
 
 GRID = DEFAULT_GRID
 LEVEL = 12
@@ -161,7 +161,8 @@ def test_locate_pairs_matches_locate_batch_on_banded_edges():
 
 
 def test_locate_pairs_unbanded_edge_lists():
-    """pip_join's form: whole edge lists, edge_ids=None, chunked."""
+    """pip_join's shuffle-plan form: whole edge lists, edge_ids=None,
+    chunked."""
     rows = _polygons()
     px, py = _probe_points(rows, np.random.RandomState(6))
     pps = [PreparedPolygon(gc.from_wkb(w)) for _, w in rows]

@@ -69,8 +69,9 @@ def test_pip_join_salted_same_result(spark):
     pts = pd.DataFrame({"point_id": np.arange(n), "x": rng.uniform(0, 10, n), "y": rng.uniform(0, 10, n)})
     polys = pd.DataFrame({"poly_id": [0], "geom": [C.to_wkb(C.from_wkt(SQ1))]})
     plain = pip_join(spark.createDataFrame(pts), spark.createDataFrame(polys)).toPandas()
+    # salting applies to the shuffle plan's cell join
     salted = pip_join(
-        spark.createDataFrame(pts), spark.createDataFrame(polys), salt=4
+        spark.createDataFrame(pts), spark.createDataFrame(polys), salt=4, broadcast=False
     ).toPandas()
     assert set(zip(plain["point_id"], plain["poly_id"])) == set(
         zip(salted["point_id"], salted["poly_id"])
@@ -275,29 +276,56 @@ def test_spark_functions_envelope_predicates(spark):
     assert row["c"] == "POINT (5 5)"
 
 
-def test_pip_join_shuffle_path_matches_broadcast(spark):
-    """Large-large path: broadcast=False keeps WKB through the shuffle
-    join; results must match the broadcast-dict path exactly."""
+@pytest.mark.parametrize("predicate", ["intersects", "covers", "contains", "touches"])
+def test_pip_join_shuffle_path_matches_broadcast(spark, predicate):
+    """The two plans of every point predicate against the oracle
+    PreparedPolygon.locate_batch: the broadcast plan (banded CSR
+    kernel) and the shuffle plan (cell equi-join carrying WKB, full
+    edge lists).  Probes sit on vertices and edges, one or two ulps
+    either side of cell boundaries (level 20: 4 m cells on multiples of
+    4), and rows with NULL or NaN coordinates; ids are strings and one
+    probe column rides through."""
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+    from geospark.geom.predicates import BOUNDARY, INTERIOR
     from geospark.ops.joins import pip_join
 
+    wanted = {"intersects": (BOUNDARY, INTERIOR), "covers": (BOUNDARY, INTERIOR),
+              "contains": (INTERIOR,), "touches": (BOUNDARY,)}[predicate]
+    shapes = {
+        "a": SQ1,
+        "b": SQ2,
+        "c": "POLYGON ((0 0, 20 0, 20 20, 0 20, 0 0), (5 5, 15 5, 15 15, 5 15, 5 5))",
+        "d": "POLYGON ((4 4, 16 4, 16 16, 4 16, 4 4))",
+    }
+    axis = np.array([0.0, 4.0, 5.0, 8.0, 10.0, 12.0, 15.0, 16.0, 20.0])
+    axis = np.unique(np.r_[axis, np.nextafter(axis, -np.inf), np.nextafter(axis, np.inf),
+                           np.nextafter(np.nextafter(axis, -np.inf), -np.inf),
+                           np.nextafter(np.nextafter(axis, np.inf), np.inf)])
+    gx, gy = np.meshgrid(axis, np.r_[axis, 2.5, 7.3])
     rng = np.random.RandomState(13)
-    n = 800
-    pts = pd.DataFrame(
-        {"point_id": np.arange(n), "x": rng.uniform(-5, 25, n), "y": rng.uniform(-5, 25, n)}
-    )
-    polys = pd.DataFrame(
-        {
-            "poly_id": [0, 1],
-            "geom": [
-                C.to_wkb(C.from_wkt(SQ1)),
-                C.to_wkb(C.from_wkt("POLYGON ((10 10, 20 10, 20 20, 10 20, 10 10))")),
-            ],
-        }
-    )
-    bc = pip_join(spark.createDataFrame(pts), spark.createDataFrame(polys), broadcast=True).toPandas()
-    sh = pip_join(spark.createDataFrame(pts), spark.createDataFrame(polys), broadcast=False).toPandas()
-    assert set(zip(bc["point_id"], bc["poly_id"])) == set(zip(sh["point_id"], sh["poly_id"]))
-    assert len(bc) > 0
+    px = np.r_[gx.ravel(), rng.uniform(-5, 25, 300)]
+    py = np.r_[gy.ravel(), rng.uniform(-5, 25, 300)]
+    rows = [(f"p{i}", float(x), float(y), f"t{i}") for i, (x, y) in enumerate(zip(px, py))]
+    rows += [("nul_x", None, 5.0, "u"), ("nul_y", 5.0, None, "u"),
+             ("nan_x", float("nan"), 5.0, "u"), ("nan_y", 5.0, float("nan"), "u")]
+    schema = StructType([StructField("point_id", StringType()), StructField("x", DoubleType()),
+                         StructField("y", DoubleType()), StructField("tag", StringType())])
+    pts = spark.createDataFrame(rows, schema)
+    polys = spark.createDataFrame(pd.DataFrame(
+        {"poly_id": list(shapes), "geom": [C.to_wkb(C.from_wkt(w)) for w in shapes.values()]}
+    ))
+    want = set()
+    for pid, w in shapes.items():
+        loc = PreparedPolygon(C.from_wkt(w)).locate_batch(px, py)
+        want |= {(f"p{i}", pid, f"t{i}") for i in np.flatnonzero(np.isin(loc, wanted))}
+    assert len(want) > 100
+    for broadcast in (True, False):
+        got = pip_join(pts, polys, predicate=predicate, level=20, broadcast=broadcast,
+                       keep_cols=["tag"]).toPandas()
+        assert list(got.columns) == ["point_id", "poly_id", "tag"]
+        assert len(got) == len(want), broadcast
+        assert set(zip(got["point_id"], got["poly_id"], got["tag"])) == want, broadcast
 
 
 def test_predicate_join_broadcast_matches_shuffle(spark):
@@ -343,12 +371,14 @@ def test_predicate_join_broadcast_matches_shuffle(spark):
     assert len(bcast) >= 0 and len(shuf) >= 0
 
 
-def test_pip_join_size_gate_falls_back_to_shuffle(spark):
-    """Only the default broadcast=None is size-gated: over the threshold
-    it takes the cell-join plan whose candidate rows carry each
-    polygon's WKB (no broadcast polygon map, no unbounded driver
-    collect).  An explicit broadcast=True is the caller's call and is
-    honoured.  Both plans give the same output."""
+def test_pip_join_size_gate_falls_back_to_shuffle(spark, monkeypatch):
+    """Only the default broadcast=None is size-gated: over
+    BROADCAST_MAX_BYTES it takes the cell-join plan whose candidate
+    rows carry each polygon's WKB (no broadcast index, no unbounded
+    driver collect).  An explicit broadcast=True is the caller's call
+    and is honoured: one mapInArrow kernel, no join.  Both plans give
+    the same output."""
+    from geospark.ops import joins as J
     from geospark.ops.joins import estimate_build_bytes, pip_join
 
     rng = np.random.RandomState(29)
@@ -369,15 +399,18 @@ def test_pip_join_size_gate_falls_back_to_shuffle(spark):
     est = estimate_build_bytes(spolys, "geom")
     assert est > 0
 
+    monkeypatch.setattr(J, "BROADCAST_MAX_BYTES", 1)
+
     def run(**kw):
-        df = pip_join(spark.createDataFrame(pts), spolys, broadcast_threshold=1, **kw)
-        return df._jdf.queryExecution().analyzed().toString(), df.toPandas()
+        df = pip_join(spark.createDataFrame(pts), spolys, **kw)
+        return df._jdf.queryExecution().executedPlan().toString(), df.toPandas()
 
     gated_plan, gated = run()
     forced_plan, forced = run(broadcast=True)
-    # the chosen plan: the gated default's build side carries the WKB,
-    # the honoured broadcast=True's build side does not
-    assert "__pwkb" in gated_plan, gated_plan
+    # the chosen plan: the gated default's build side carries the WKB;
+    # the honoured broadcast=True is one kernel over the probe
+    assert "__pwkb" in gated_plan and "Join" in gated_plan, gated_plan
+    assert forced_plan.count("MapInArrow") == 1 and "Join" not in forced_plan, forced_plan
     assert "__pwkb" not in forced_plan, forced_plan
     key = lambda d: set(zip(d["point_id"], d["poly_id"]))
     assert key(gated) == key(forced)
