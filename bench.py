@@ -44,9 +44,9 @@ def run(sf_dir: str, cpus: int, n_pages: int, n_districts: int = 2000):
     # Input synthesis is NOT the engine: materialize the deterministic
     # pages table to parquet once (cached across runs — the generator
     # is a pure function of ids), then time the pipeline the way a
-    # production job runs it: columnar scan → ONE python stage
-    # (geocode + cell encode fused) → JVM broadcast cell join → ONE
-    # python refine stage (PIP + tile assignment fused) → count.
+    # production job runs it: columnar scan → JVM geo-token extraction
+    # → pip_join's broadcast plan, ONE mapInArrow kernel (cell encode,
+    # banded point-in-polygon, tile encode) → count.
     from geospark.ops.joins import choose_level
 
     pages_path = f"/tmp/geospark_bench_pages_{n_pages}.parquet"

@@ -575,8 +575,10 @@ def _shares_driver_fs(spark) -> bool:
     master, whose executors run in the driver's machine; a cluster
     whose executors mount the path at the same place must say so
     (read_gpkg(distributed=True), write_gpkg(sink_mode="merge"))."""
+    from ..session import local_master
+
     try:
-        return spark.sparkContext.master.startswith("local")
+        return local_master(spark.sparkContext.master)
     except Exception:
         return False
 

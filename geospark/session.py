@@ -4,6 +4,21 @@ Scale posture (SURVEY.md §4.2, BASELINE scaling rule): AQE on
 (runtime re-plan + skew-join), Arrow batches for every pandas UDF
 stage, shuffle partitions sized for the local harness but overridable
 for cluster runs via SPARK_GRAFT_* env vars.
+
+Python workers of a local session run under geospark._daemon, which
+hands over to pyspark's own daemon after one change to `sys.path`.
+Spark puts pyspark.zip and the spark-core jar first on the workers'
+path, and every task's `importlib.invalidate_caches()` makes each
+zipimporter re-read its archive's directory: 134-229 ms of CPU per
+task, more than the flagship kernel itself (38-49 ms for an 87k-row
+task), on every partition of every Python stage.  The daemon swaps
+pyspark.zip for the same distribution's source tree and drops archives
+that hold no Python (see its docstring); per-task invalidation then
+costs 0.3-0.4 ms.  The daemon is set only on a local[...] master, the
+same fact io/gpkg.py's placement reads: it needs `geospark` importable
+before any task ships it, so the directory holding the package goes on
+the executors' PYTHONPATH, and a driver-local path means nothing to a
+remote executor.  Other masters keep pyspark.daemon.
 """
 
 from __future__ import annotations
@@ -12,6 +27,14 @@ import os
 import tempfile
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def local_master(master: str) -> bool:
+    """Do executors run on the driver's machine, so that a path the
+    driver names is the same file for them?"""
+    return master.startswith("local")
 
 
 def build_session(
@@ -75,4 +98,8 @@ def build_session(
             ),
         )
     )
+    if local_master(master):
+        b = b.config("spark.python.daemon.module", "geospark._daemon").config(
+            "spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT
+        )
     return b.getOrCreate()
